@@ -21,8 +21,8 @@ import time
 import uuid
 from dataclasses import asdict, dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -93,30 +93,25 @@ class Lineage:
         with job_progress(spark, f"stage {stage}"):
             df = fn()
             df.write.mode("overwrite").parquet(out_path)
-        back = spark.read.parquet(out_path)
-        # per-partition (= per output file) lineage from the files themselves
-        parts = (
-            back.groupBy(F.input_file_name().alias("file"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
-        total_rows = 0
-        for p in parts:
-            fname = p["file"].replace("file://", "")
-            nbytes = os.path.getsize(fname) if os.path.exists(fname) else -1
-            total_rows += p["rows"]
+        # per-partition (= per output file) lineage from the parquet
+        # footers; files with no rows count in bytes only
+        paths = {f: os.path.join(out_path, f)
+                 for f in sorted(os.listdir(out_path))
+                 if f.endswith(".parquet")}
+        rows = {f: pq.read_metadata(p).num_rows for f, p in paths.items()}
+        nbytes = {f: os.path.getsize(p) for f, p in paths.items()}
+        parts = [f for f in paths if rows[f]]
+        for f in parts:
             self._append({"run_id": self.run_id, "stage": stage,
-                          "status": "partition", "file": os.path.basename(fname),
-                          "rows": p["rows"], "bytes": nbytes})
+                          "status": "partition", "file": f,
+                          "rows": rows[f], "bytes": nbytes[f]})
         rec = StageRecord(
             run_id=self.run_id, stage=stage, status="complete",
-            input_rows=input_rows, output_rows=total_rows,
-            output_bytes=sum(
-                os.path.getsize(os.path.join(out_path, f))
-                for f in os.listdir(out_path) if f.endswith(".parquet")),
-            num_partitions=len(parts), t_start=t0, t_end=time.time())
+            input_rows=input_rows, output_rows=sum(rows.values()),
+            output_bytes=sum(nbytes.values()), num_partitions=len(parts),
+            t_start=t0, t_end=time.time())
         self._append(asdict(rec))
-        return back
+        return spark.read.parquet(out_path)
 
     def summary(self) -> list[dict]:
         return [r for r in self.records() if r.get("status") == "complete"]

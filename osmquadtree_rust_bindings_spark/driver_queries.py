@@ -71,6 +71,13 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _conf_bytes(raw: str) -> int:
+    """A Spark byte-size setting ('134217728', '128MB', '64m', '1g')."""
+    s = raw.strip().lower()
+    num = s.rstrip("bkmgtp")
+    return int(num) << 10 * " kmgtp".index(s[len(num):].rstrip("b") or " ")
+
+
 def _pts_with_qt(spark: SparkSession, sf_dir: str) -> DataFrame:
     return Q.with_point_qt(_pts(spark, sf_dir), "lon", "lat", 18,
                            out="qt_point")
@@ -206,13 +213,8 @@ def q_a4_num_blocks(spark, sf_dir):
                  for f in _os.listdir(path) if f.endswith(".parquet")]
     else:
         sizes = [_os.path.getsize(path)]
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    units = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    s = raw.strip().lower()
-    mult = 1
-    if s and s[-1] in units:
-        mult, s = units[s[-1]], s[:-1]
-    max_pb = int(s) * mult
+    max_pb = _conf_bytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
     ceiling = sum(math.ceil(sz / max_pb) for sz in sizes)
     nb = CNT.num_blocks(li)
     rows = li.agg(F.count(F.lit(1)).alias("n_rows"))

@@ -4,9 +4,9 @@ The full reference lifecycle (SURVEY.md §3) as named, independently
 resumable stages:
 
   calcqts   run_calcqts: lon/lat + bbox/point qt + coarse cell
-  tileplan  prepare_quadtree_tree + find_tree_groups (driver-side plan,
+  tileplan  plan_histogram + find_tree_groups (driver-side plan,
             persisted as a tiny parquet so resume reuses the exact plan)
-  tiled     assign_tiles + repartition-by-tile write (sort_blocks S14)
+  tiled     assign_tiles_broadcast over tileplan's cell histogram
   counts    per-tile Count fingerprint (the pipeline checksum, §5.2)
 
 Each stage goes through Lineage.run_stage: skipped when already complete
@@ -18,9 +18,7 @@ run_id and workdir.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from osmquadtree_rust_bindings_spark.checkpoint import Lineage
 from osmquadtree_rust_bindings_spark.operators import calcqts as CQ
@@ -32,16 +30,13 @@ class TilingPipeline:
     def __init__(self, spark: SparkSession, workdir: str,
                  run_id: str | None = None, group_target: int = T.GROUP_TARGET,
                  group_depth: int = 17, salt_over: int | None = None,
-                 use_broadcast: bool = True):
+                 max_cells: int = T.PLAN_MAX_CELLS):
         self.spark = spark
         self.lineage = Lineage(workdir, run_id)
         self.group_target = group_target
         self.group_depth = group_depth
         self.salt_over = salt_over
-        # broadcast-join assignment (zero Python in the hot path — the
-        # measured scale path); the pandas longest-prefix kernel remains
-        # as the fallback for qt domains with no cell histogram
-        self.use_broadcast = use_broadcast
+        self.max_cells = max_cells
 
     def run(self, images: DataFrame) -> dict[str, DataFrame]:
         spark = self.spark
@@ -52,50 +47,41 @@ class TilingPipeline:
             lambda: CQ.run_calcqts(
                 images.drop("bytes") if "bytes" in images.columns
                 else images))
+        # cell histogram by depth, kept for tiled when planned in this run
+        hist = {}
 
         def plan() -> DataFrame:
-            depth = min(self.group_depth,
-                        T.choose_plan_depth(calc, "qt"))
-            cells = T.prepare_quadtree_tree(calc, "qt", depth)
+            depth, cells = T.plan_histogram(calc, "qt", self.group_depth,
+                                            self.max_cells)
+            hist[depth] = cells
             groups = T.find_tree_groups(cells, target=self.group_target)
             # persist the planning depth with the plan so a resumed run
             # reuses the exact same assignment domain
             groups["plan_depth"] = depth
-            return spark.createDataFrame(
-                groups.astype({"tile": np.int64, "weight": np.int64,
-                               "plan_depth": np.int64}))
+            return spark.createDataFrame(groups.astype(np.int64))
 
         plan_df = lin.run_stage(spark, "tileplan", plan)
-        plan_pdf = plan_df.toPandas().astype(
-            {"tile": np.int64, "weight": np.int64})
+        plan_pdf = plan_df.toPandas()
         groups_pdf = plan_pdf[["tile", "weight"]]
-        if "plan_depth" in plan_pdf.columns and len(plan_pdf):
-            plan_depth = int(plan_pdf["plan_depth"].astype(np.int64).iloc[0])
-        else:
-            # resumed plan written by an older version (no persisted
-            # depth), or an empty corpus: re-derive deterministically
-            plan_depth = min(self.group_depth,
-                             T.choose_plan_depth(calc, "qt"))
+        plan_depth = int(plan_pdf["plan_depth"].iloc[0])
 
         def assign() -> DataFrame:
-            if not self.use_broadcast:
-                return T.assign_tiles(calc, groups_pdf,
-                                      salt_over=self.salt_over)
-            # the cell domain is bounded (choose_plan_depth keeps it under
-            # max_cells), so rebuilding it is one narrow agg; assignment
-            # is then a broadcast equi-join on the compacted cell key
-            cells = T.prepare_quadtree_tree(calc, "qt", plan_depth)
+            # rebuilt only when tileplan was skipped on resume; assignment
+            # is a broadcast equi-join (zero Python in the hot path)
+            cells = hist.get(plan_depth)
+            if cells is None:
+                cells = T.prepare_quadtree_tree(calc, "qt", plan_depth)
             return T.assign_tiles_broadcast(calc, cells, groups_pdf,
                                             plan_depth,
                                             salt_over=self.salt_over)
 
         tiled = lin.run_stage(spark, "tiled", assign)
-
+        # O(tiles) rows: a one-task sort, no range-partition sampling job
         counts = lin.run_stage(
             spark, "counts",
             lambda: CNT.count_fingerprint(
                 tiled, group=["tile"], id_col="image_id")
-            .orderBy("tile"))
+            .coalesce(1).sortWithinPartitions("tile"))
 
         return {"calcqts": calc, "tileplan": plan_df,
                 "tiled": tiled, "counts": counts}

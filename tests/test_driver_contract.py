@@ -33,6 +33,15 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
 
 
+@pytest.mark.parametrize("raw,want", [
+    ("128MB", 128 << 20), ("64m", 64 << 20), ("1g", 1 << 30),
+    ("134217728", 134217728),
+])
+def test_conf_bytes_units(raw, want):
+    from osmquadtree_rust_bindings_spark.driver_queries import _conf_bytes
+    assert _conf_bytes(raw) == want
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

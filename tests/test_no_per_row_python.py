@@ -16,7 +16,6 @@ DRIVER_SIDE_ALLOWED = {
                                      # + batch-kNN cell hist (O(4^level))
     "operators/similarity.py": 1,    # near-dup broadcast matrix (bounded side)
     "operators/tiling.py": 2,    # depth-choice agg row + cell histogram
-    "checkpoint.py": 1,          # lineage rows (O(partitions))
     "driver_queries.py": 1,      # s2_header bbox agg (one metadata row)
 }
 

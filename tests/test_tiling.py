@@ -137,6 +137,49 @@ def test_find_tree_groups_vs_oracle(spark, calc):
         assert got.weight.sum() == N
 
 
+def test_pipeline_plan_under_bound_matches_sketch_plan(spark, calc,
+                                                      images_pdf, tmp_path):
+    from osmquadtree_rust_bindings_spark.plans.pipeline import TilingPipeline
+
+    depth = min(17, T.choose_plan_depth(calc, "qt"))
+    want = T.prepare_quadtree_tree(calc, "qt", depth)
+    got_depth, got = T.plan_histogram(calc, "qt", 17)
+    assert got_depth == depth
+    pd.testing.assert_frame_equal(got, want)
+    # the bound is inclusive: exactly len(want) cells still fit
+    pd.testing.assert_frame_equal(
+        T.prepare_quadtree_tree(calc, "qt", depth, max_cells=len(want)), want)
+    assert T.prepare_quadtree_tree(calc, "qt", depth,
+                                   max_cells=len(want) - 1) is None
+    out = TilingPipeline(spark, str(tmp_path / "wd"), group_target=200
+                         ).run(spark.createDataFrame(images_pdf))
+    plan = out["tileplan"].toPandas().sort_values("tile")
+    assert (plan.plan_depth == depth).all()
+    exp = T.find_tree_groups(want, target=200)
+    assert plan.tile.tolist() == exp.tile.tolist()
+    assert plan.weight.tolist() == exp.weight.tolist()
+
+
+def test_plan_overflow_falls_back_to_sketch(spark, calc, images_pdf,
+                                            tmp_path):
+    from osmquadtree_rust_bindings_spark.plans.pipeline import TilingPipeline
+
+    assert T.prepare_quadtree_tree(calc, "qt", 17, max_cells=10) is None
+    depth, cells = T.plan_histogram(calc, "qt", 17, max_cells=10)
+    assert depth < 17
+    assert cells.weight.sum() == N
+    out = TilingPipeline(spark, str(tmp_path / "wd"), group_target=200,
+                         max_cells=10
+                         ).run(spark.createDataFrame(images_pdf))
+    plan = out["tileplan"].toPandas()
+    assert (plan.plan_depth == depth).all()
+    tiled = out["tiled"]
+    assert tiled.count() == N
+    assert tiled.filter(F.col("tile").isNull()).count() == 0
+    assert set(tiled.select("tile").distinct().toPandas().tile) <= \
+        set(plan.tile)
+
+
 def test_group_weights_bounded(calc):
     cells = T.prepare_quadtree_tree(calc, "qt", maxdepth=17)
     target = 200
