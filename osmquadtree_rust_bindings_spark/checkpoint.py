@@ -57,11 +57,18 @@ class Lineage:
         with open(self.path) as f:
             return [json.loads(line) for line in f if line.strip()]
 
-    def stage_complete(self, stage: str) -> bool:
-        recs = [r for r in self.records()
+    def _completed(self, stage: str) -> list[dict]:
+        return [r for r in self.records()
                 if r.get("stage") == stage and r.get("run_id") == self.run_id
                 and r.get("status") == "complete"]
-        return bool(recs) and os.path.exists(self.stage_path(stage))
+
+    def stage_complete(self, stage: str) -> bool:
+        return (bool(self._completed(stage))
+                and os.path.exists(self.stage_path(stage)))
+
+    def output_rows(self, stage: str) -> int:
+        """Rows the completed ``stage`` wrote in this run."""
+        return self._completed(stage)[-1]["output_rows"]
 
     def stage_path(self, stage: str) -> str:
         return os.path.join(self.workdir, f"stage={stage}")

@@ -153,37 +153,20 @@ def choose_plan_depth(df: DataFrame, qt_col: str = "qt",
 
 
 def prepare_quadtree_tree(df: DataFrame, qt_col: str = "qt",
-                          maxdepth: int = 17,
-                          max_cells: int | None = None) -> pd.DataFrame | None:
+                          maxdepth: int = 17) -> pd.DataFrame:
     """A9: per-cell weights at ``maxdepth`` — one narrow aggregation.
 
     Elements whose qt is shallower than maxdepth keep their own (internal)
     cell, matching the reference tree built from the -qts.pbf stream.
-    Returns a pandas frame (cell, weight) sorted by cell, or ``None`` if
-    it has more than ``max_cells`` cells (then only max_cells+1 collected).
+    Returns a pandas frame (cell, weight) sorted by cell.
     """
     agg = (
         df.select(Q.qt_round_dyn(F.col(qt_col),
                                  F.lit(maxdepth)).alias("cell"))
         .groupBy("cell").count()
     )
-    if max_cells is not None:
-        agg = agg.limit(max_cells + 1)
     pdf = agg.toPandas().rename(columns={"count": "weight"})
-    if max_cells is not None and len(pdf) > max_cells:
-        return None
     return pdf.sort_values("cell").reset_index(drop=True)
-
-
-def plan_histogram(df: DataFrame, qt_col: str = "qt", maxdepth: int = 17,
-                   max_cells: int = PLAN_MAX_CELLS) -> tuple[int, pd.DataFrame]:
-    """(depth, cells): the exact ``maxdepth`` histogram if it has at most
-    ``max_cells`` cells, else the :func:`choose_plan_depth` depth's."""
-    cells = prepare_quadtree_tree(df, qt_col, maxdepth, max_cells=max_cells)
-    if cells is not None:
-        return maxdepth, cells
-    depth = choose_plan_depth(df, qt_col, max_cells, maxdepth)
-    return depth, prepare_quadtree_tree(df, qt_col, depth)
 
 
 def find_tree_groups(cells: pd.DataFrame, target: int = GROUP_TARGET,
@@ -394,7 +377,8 @@ def run_sortblocks(df: DataFrame, out_path: str, qt_col: str = "qt",
     from osmquadtree_rust_bindings_spark.functions.format import LogTimes
 
     lt = LogTimes()
-    depth, cells = plan_histogram(df, qt_col, max_qt_level)
+    depth = choose_plan_depth(df, qt_col, maxdepth=max_qt_level)
+    cells = prepare_quadtree_tree(df, qt_col, depth)
     lt("prepare quadtree tree")
     groups = find_tree_groups(cells, target=target, min_target=min_target)
     lt("find tree groups")

@@ -4,7 +4,7 @@ The full reference lifecycle (SURVEY.md §3) as named, independently
 resumable stages:
 
   calcqts   run_calcqts: lon/lat + bbox/point qt + coarse cell
-  tileplan  plan_histogram + find_tree_groups (driver-side plan,
+  tileplan  prepare_quadtree_tree + find_tree_groups (driver-side plan,
             persisted as a tiny parquet so resume reuses the exact plan)
   tiled     assign_tiles_broadcast over tileplan's cell histogram
   counts    per-tile Count fingerprint (the pipeline checksum, §5.2)
@@ -29,14 +29,12 @@ from osmquadtree_rust_bindings_spark.operators import tiling as T
 class TilingPipeline:
     def __init__(self, spark: SparkSession, workdir: str,
                  run_id: str | None = None, group_target: int = T.GROUP_TARGET,
-                 group_depth: int = 17, salt_over: int | None = None,
-                 max_cells: int = T.PLAN_MAX_CELLS):
+                 group_depth: int = 17, salt_over: int | None = None):
         self.spark = spark
         self.lineage = Lineage(workdir, run_id)
         self.group_target = group_target
         self.group_depth = group_depth
         self.salt_over = salt_over
-        self.max_cells = max_cells
 
     def run(self, images: DataFrame) -> dict[str, DataFrame]:
         spark = self.spark
@@ -47,13 +45,18 @@ class TilingPipeline:
             lambda: CQ.run_calcqts(
                 images.drop("bytes") if "bytes" in images.columns
                 else images))
-        # cell histogram by depth, kept for tiled when planned in this run
-        hist = {}
+        # tileplan's cell histogram, kept for tiled when planned in this run
+        planned = []
 
         def plan() -> DataFrame:
-            depth, cells = T.plan_histogram(calc, "qt", self.group_depth,
-                                            self.max_cells)
-            hist[depth] = cells
+            # distinct cells <= rows: a corpus within the bound takes the
+            # exact group_depth histogram, larger ones the depth sketch
+            depth = self.group_depth
+            if lin.output_rows("calcqts") > T.PLAN_MAX_CELLS:
+                depth = min(depth, T.choose_plan_depth(calc, "qt",
+                                                       T.PLAN_MAX_CELLS))
+            cells = T.prepare_quadtree_tree(calc, "qt", depth)
+            planned.append(cells)
             groups = T.find_tree_groups(cells, target=self.group_target)
             # persist the planning depth with the plan so a resumed run
             # reuses the exact same assignment domain
@@ -68,9 +71,8 @@ class TilingPipeline:
         def assign() -> DataFrame:
             # rebuilt only when tileplan was skipped on resume; assignment
             # is a broadcast equi-join (zero Python in the hot path)
-            cells = hist.get(plan_depth)
-            if cells is None:
-                cells = T.prepare_quadtree_tree(calc, "qt", plan_depth)
+            cells = (planned[0] if planned
+                     else T.prepare_quadtree_tree(calc, "qt", plan_depth))
             return T.assign_tiles_broadcast(calc, cells, groups_pdf,
                                             plan_depth,
                                             salt_over=self.salt_over)

@@ -137,22 +137,40 @@ def test_find_tree_groups_vs_oracle(spark, calc):
         assert got.weight.sum() == N
 
 
-def test_pipeline_plan_under_bound_matches_sketch_plan(spark, calc,
-                                                      images_pdf, tmp_path):
+def _run_pipeline(spark, images_pdf, tmp_path, monkeypatch):
+    """Run the pipeline, returning its outputs and the cell frames its
+    planner built and the depths the sketch was asked for."""
     from osmquadtree_rust_bindings_spark.plans.pipeline import TilingPipeline
 
-    depth = min(17, T.choose_plan_depth(calc, "qt"))
-    want = T.prepare_quadtree_tree(calc, "qt", depth)
-    got_depth, got = T.plan_histogram(calc, "qt", 17)
-    assert got_depth == depth
-    pd.testing.assert_frame_equal(got, want)
-    # the bound is inclusive: exactly len(want) cells still fit
-    pd.testing.assert_frame_equal(
-        T.prepare_quadtree_tree(calc, "qt", depth, max_cells=len(want)), want)
-    assert T.prepare_quadtree_tree(calc, "qt", depth,
-                                   max_cells=len(want) - 1) is None
+    built, sketched = [], []
+    prepare, sketch = T.prepare_quadtree_tree, T.choose_plan_depth
+
+    def record_cells(*a, **kw):
+        built.append(prepare(*a, **kw))
+        return built[-1]
+
+    def record_depth(*a, **kw):
+        sketched.append(sketch(*a, **kw))
+        return sketched[-1]
+
+    monkeypatch.setattr(T, "prepare_quadtree_tree", record_cells)
+    monkeypatch.setattr(T, "choose_plan_depth", record_depth)
     out = TilingPipeline(spark, str(tmp_path / "wd"), group_target=200
                          ).run(spark.createDataFrame(images_pdf))
+    return out, built, sketched
+
+
+def test_pipeline_plan_under_bound_matches_sketch_plan(spark, calc,
+                                                      images_pdf, tmp_path,
+                                                      monkeypatch):
+    depth = min(17, T.choose_plan_depth(calc, "qt"))
+    want = T.prepare_quadtree_tree(calc, "qt", depth)
+    out, built, sketched = _run_pipeline(spark, images_pdf, tmp_path,
+                                         monkeypatch)
+    # N <= PLAN_MAX_CELLS: no sketch, one exact histogram
+    assert sketched == []
+    assert len(built) == 1
+    pd.testing.assert_frame_equal(built[0], want)
     plan = out["tileplan"].toPandas().sort_values("tile")
     assert (plan.plan_depth == depth).all()
     exp = T.find_tree_groups(want, target=200)
@@ -160,17 +178,16 @@ def test_pipeline_plan_under_bound_matches_sketch_plan(spark, calc,
     assert plan.weight.tolist() == exp.weight.tolist()
 
 
-def test_plan_overflow_falls_back_to_sketch(spark, calc, images_pdf,
-                                            tmp_path):
-    from osmquadtree_rust_bindings_spark.plans.pipeline import TilingPipeline
-
-    assert T.prepare_quadtree_tree(calc, "qt", 17, max_cells=10) is None
-    depth, cells = T.plan_histogram(calc, "qt", 17, max_cells=10)
+def test_plan_over_bound_falls_back_to_sketch(spark, calc, images_pdf,
+                                              tmp_path, monkeypatch):
+    monkeypatch.setattr(T, "PLAN_MAX_CELLS", 10)
+    depth = T.choose_plan_depth(calc, "qt", 10)
     assert depth < 17
-    assert cells.weight.sum() == N
-    out = TilingPipeline(spark, str(tmp_path / "wd"), group_target=200,
-                         max_cells=10
-                         ).run(spark.createDataFrame(images_pdf))
+    out, built, sketched = _run_pipeline(spark, images_pdf, tmp_path,
+                                         monkeypatch)
+    assert sketched == [depth]
+    assert len(built) == 1 and len(built[0]) <= 10
+    assert built[0].weight.sum() == N
     plan = out["tileplan"].toPandas()
     assert (plan.plan_depth == depth).all()
     tiled = out["tiled"]
