@@ -4,7 +4,7 @@ Usage (cluster shape, north rule):
   python osmquadtree_rust_bindings_spark/session.py  # builds engine zip
   spark-submit --py-files /tmp/osmquadtree_rust_bindings_spark-pyfiles.zip \
       jobs/run_pipeline.py --input <images parquet> --workdir <dir> \
-      [--run-id R] [--target 40000] [--salt-over 250000]
+      [--run-id R] [--target 40000]
 
 Local sandbox: python jobs/run_pipeline.py --n 100000 generates the corpus
 first.  Resumable: re-invoking with the same --workdir/--run-id skips
@@ -29,7 +29,6 @@ def main() -> None:
     ap.add_argument("--workdir", default="/tmp/osmqt_pipeline")
     ap.add_argument("--run-id", default="default")
     ap.add_argument("--target", type=int, default=40_000)
-    ap.add_argument("--salt-over", type=int, default=None)
     ap.add_argument("--master", default=None)
     ap.add_argument("--no-bytes", action="store_true",
                     help="generate the corpus without image payloads "
@@ -55,7 +54,7 @@ def main() -> None:
 
     t0 = time.time()
     pipe = TilingPipeline(spark, args.workdir, run_id=args.run_id,
-                          group_target=args.target, salt_over=args.salt_over)
+                          group_target=args.target)
     out = pipe.run(images)
     rows = out["tiled"].count()
     print(json.dumps({

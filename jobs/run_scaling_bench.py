@@ -12,7 +12,7 @@ SparkContexts accumulates heap/listener state and skews the later run
 (measured 4.7x distortion).
 
 Job = the metric pipeline: calc_qts tile assignment -> tile grouping +
-salted repartition checksum -> bbox join + PIP join; counts emitted tile
+per-tile checksum -> bbox join + PIP join; counts emitted tile
 assignments + join output rows.  The corpus is generated once without
 image bytes — the measured job never reads the bytes column (column
 pruning), so payload generation time is irrelevant to the metric.
@@ -77,10 +77,9 @@ def run_job(spark) -> dict:
     # that would mask executor scaling)
     cells = T.prepare_quadtree_tree(calc, "qt", 8)
     groups = T.find_tree_groups(cells, target=40_000)
-    tiled = T.assign_tiles_broadcast(calc.select("img_idx", "qt"), cells,
-                                     groups, plan_depth=8,
-                                     salt_over=100_000)
-    tile_checksum = tiled.groupBy("tile", "tile_salt").agg(
+    tiled = T.assign_tiles(calc.select("img_idx", "qt"), cells, groups,
+                           plan_depth=8)
+    tile_checksum = tiled.groupBy("tile").agg(
         F.count(F.lit(1)).alias("n")).agg(
         F.sum(F.col("tile") % 1_000_003 * F.col("n")).alias("s"),
         F.sum("n").alias("n")).collect()[0]
@@ -204,7 +203,7 @@ def main() -> None:
     with open("BENCH/BASELINE.md", "w") as f:
         f.write(f"""# BENCH/BASELINE — measured performance + scaling evidence
 
-Job: calc_qts tile assignment -> tile grouping (target 40k, salted,
+Job: calc_qts tile assignment -> tile grouping (target 40k,
 checksummed) -> bbox join (60 boxes) + PIP join (100 polygons) over a
 {N_IMAGES:,}-row synthetic image corpus (FIXTURES.md schema, bytes column
 never read by the job).  Metric = tile assignments + join output rows per
@@ -236,7 +235,7 @@ Stage shape at each level (same code, same input): parquet scan (32MB
 splits, ~4 task waves/core) -> calc_qts whole-stage-codegen Column math ->
 one parquet materialization of the qts product (i64-keyed like the
 reference's -qts.pbf) -> cell histogram (groupBy) + driver bin-packing ->
-broadcast tile-assignment join on compacted cell keys + salted checksum ->
+broadcast tile-assignment join on compacted cell keys + per-tile checksum ->
 bbox cover+refine join -> PIP cover join + vectorized ray-crossing refine
 (Arrow mapInPandas).
 """ + extra_md)

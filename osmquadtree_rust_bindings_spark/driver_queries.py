@@ -16,6 +16,11 @@ phash->lonlat derivation of FIXTURES.md §1.1.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -69,6 +74,20 @@ def _pts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+@functools.cache
+def _gate_root() -> str:
+    """One scratch directory per process for every gate that writes files,
+    removed at interpreter exit.  A gate cannot remove its own files: the
+    DataFrame it returns reads them lazily, after the gate has returned."""
+    root = tempfile.mkdtemp(prefix="osmqt_gates_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _gate_tmpdir(prefix: str) -> str:
+    return tempfile.mkdtemp(prefix=prefix, dir=_gate_root())
 
 
 def _conf_bytes(raw: str) -> int:
@@ -406,12 +425,10 @@ def q_s12_filtered_merge(spark, sf_dir):
     # snapshots -> latest-wins merge, IdSet semi-join + bbox filter, write
     # as a new snapshot, read back.  The WRITE is real (temp catalog);
     # the read-back contents are fully SQL-replayable -> hash gate.
-    import tempfile
-
     from osmquadtree_rust_bindings_spark.sources.catalog import Catalog
 
     pts = _pts(spark, sf_dir)
-    cat = Catalog(tempfile.mkdtemp(prefix="s12_"))
+    cat = Catalog(_gate_tmpdir("s12_"))
     base = pts.select("rowkey", F.lit(1).alias("version"), "lon", "lat")
     cat.write(base, "t")
     chg = base.filter(F.col("rowkey") % 3 == 0) \
@@ -468,13 +485,11 @@ def q_f7_asof_read(spark, sf_dir):
     # selection, src/readpbf.rs:585-590): three snapshots written to a
     # temp catalog, read back as-of snapshot 2 (latest excluded), merged
     # latest-wins.  Fully SQL-replayable.
-    import tempfile
-
     from osmquadtree_rust_bindings_spark.operators.diff import merge_latest
     from osmquadtree_rust_bindings_spark.sources.catalog import Catalog
 
     pts = _pts(spark, sf_dir)
-    cat = Catalog(tempfile.mkdtemp(prefix="f7_"))
+    cat = Catalog(_gate_tmpdir("f7_"))
     base = pts.select("rowkey", F.lit(1).alias("version"), "lon")
     cat.write(base, "t")
     cat.write(base.filter(F.col("rowkey") % 5 == 0)
@@ -504,12 +519,11 @@ def q_s28_stream_window(spark, sf_dir):
     #   a single fp would drop an emission and break the hash, so the
     #   gate pins zero-fp at the configured capacity; k1=tile group.
     import os
-    import tempfile
     import uuid
 
     # FileStreamSource requires a directory; expose the single parquet
     # file through a symlinked temp dir (no data copy)
-    d = tempfile.mkdtemp(prefix="s28_")
+    d = _gate_tmpdir("s28_")
     os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"),
                os.path.join(d, "events.parquet"))
     schema = ("event_id long, ts timestamp, user_id long, "
@@ -540,7 +554,7 @@ def q_s28_stream_window(spark, sf_dir):
         F.col("user_id").cast("long").alias("uid"),
         (F.col("user_id") % 8).cast("long").alias("tile"),
         F.col("event_id"))
-    d2 = tempfile.mkdtemp(prefix="s28b_")
+    d2 = _gate_tmpdir("s28b_")
     bsrc = os.path.join(d2, "src")
     bout = os.path.join(d2, "out")
     bckp = os.path.join(d2, "ckp")
@@ -702,7 +716,7 @@ def q_a11_assign_invariants(spark, sf_dir):
     pts = _pts_with_qt(spark, sf_dir)
     cells = TIL.prepare_quadtree_tree(pts, "qt_point", maxdepth=10)
     groups = TIL.find_tree_groups(cells, target=2000)
-    assigned = TIL.assign_tiles(pts, groups, qt_col="qt_point")
+    assigned = TIL.assign_tiles(pts, cells, groups, 10, qt_col="qt_point")
     plan = spark.createDataFrame(
         groups[["tile"]].astype({"tile": "int64"})).withColumnRenamed(
         "tile", "ptile")
@@ -881,10 +895,9 @@ def q_x4_prefix_range_count(spark, sf_dir):
     spans, 4.2s for a 60k-row agg; rule 2's failure mode arriving via
     the optimizer rather than projection collapse)."""
     import os as _os
-    import tempfile
 
     lo, hi = sqlgen.qt_key_range(_X4_PREFIX)
-    path = _os.path.join(tempfile.mkdtemp(prefix="x4_qts_"), "qts")
+    path = _os.path.join(_gate_tmpdir("x4_qts_"), "qts")
     _pts_with_qt(spark, sf_dir).select("rowkey", "qt_point") \
         .write.mode("overwrite").parquet(path)
     qts = spark.read.parquet(path)
@@ -974,16 +987,14 @@ def q_ann_ivf_prebuilt(spark, sf_dir):
     # query-many production shape.  Oracle = the ann_ivf_topk replay.
     import hashlib
     import os
-    import tempfile
 
     emb = _read(spark, sf_dir, "embeddings")
     # per-(sf, process) path: repeat invocations IN one process overwrite
-    # in place (no /tmp accumulation of embedding copies), while two
-    # concurrent suite runs on the same sf_dir get disjoint paths — a
-    # shared path races the overwrite against the other run's deferred scan
-    idx = (tempfile.gettempdir() + "/ivf_gate_"
-           + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-           + f"_p{os.getpid()}")
+    # in place (no accumulation of embedding copies), while two concurrent
+    # suite runs on the same sf_dir get disjoint paths — a shared path
+    # races the overwrite against the other run's deferred scan
+    idx = os.path.join(_gate_root(),
+                       "ivf_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10])
     SIM.ivf_write_index(emb, idx, dim=64, cells=8)
     queries = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
@@ -1203,13 +1214,13 @@ def q_j8_multipolygon_assembly(spark, sf_dir):
 
 def q_a11_tile_assign(spark, sf_dir):
     # A11 longest-prefix tile assignment (QuadtreeTree.find,
-    # src/sortblocks.rs:78-81): driver bin-packed plan (A10) broadcast as a
-    # sorted root array, per-row assignment via vectorized searchsorted;
+    # src/sortblocks.rs:78-81): driver bin-packed plan (A10) resolved once
+    # per depth-10 cell, per-row assignment via broadcast equi-join;
     # engine-only (plan is driver-side) -> rows-only check
     pts = _pts_with_qt(spark, sf_dir)
     cells = TIL.prepare_quadtree_tree(pts, "qt_point", maxdepth=10)
     groups = TIL.find_tree_groups(cells, target=2000)
-    assigned = TIL.assign_tiles(pts, groups, qt_col="qt_point")
+    assigned = TIL.assign_tiles(pts, cells, groups, 10, qt_col="qt_point")
     return (assigned.groupBy("tile")
             .agg(F.count(F.lit(1)).cast("long").alias("num"),
                  F.min("rowkey").cast("long").alias("min_id"))
@@ -1388,15 +1399,13 @@ def q_s2_header(spark, sf_dir):
     # advanced replication cursor).  The merged header's bbox union, feature
     # lists, replication cursor and block index counts come back as one
     # all-int/string row the SQL oracle recomputes from the source table.
-    import tempfile
-
     from osmquadtree_rust_bindings_spark.sources.catalog import Catalog
 
     pts = _pts(spark, sf_dir)
     bb = pts.agg(F.min("lon"), F.min("lat"), F.max("lon"),
                  F.max("lat")).collect()[0]
     base_bbox = [int(bb[0]), int(bb[1]), int(bb[2]), int(bb[3])]
-    cat = Catalog(tempfile.mkdtemp(prefix="s2_"))
+    cat = Catalog(_gate_tmpdir("s2_"))
     cat.write(pts.repartition(4), "t", header={
         "bbox": base_bbox,
         "writingprogram": "osmquadtree-spark",

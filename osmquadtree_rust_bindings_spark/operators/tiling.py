@@ -1,28 +1,27 @@
 """Tiling engine: weighted quadtree tree, group planning, tile assignment,
-group-by-tile repartitioning — the reference's sortblocks pipeline.
+group-by-tile rebalancing — the reference's sortblocks pipeline.
 
 Reference chain (SURVEY.md §3.3): prepare_quadtree_tree (A9,
-/root/reference/src/sortblocks.rs:137-141) → find_tree_groups (A10,
+src/sortblocks.rs:137-141) → find_tree_groups (A10,
 src/sortblocks.rs:144-152, target=40000 per __init__.py:147,167-168) →
-sort_blocks repartition sink (S14, src/sortblocks.rs:156-169).
+sort_blocks sink (S14, src/sortblocks.rs:156-169).
 
 Spark shape: the weighted tree is a driver-side structure built from a
 ``groupBy(qt_round(qt, depth)).count()`` (distinct cells ≪ rows); group
-planning is deterministic driver-side bin-packing (§8.5); tile assignment is
-a broadcast longest-prefix lookup kernel (A11 analogue) — vectorized numpy
-inside a pandas UDF; the physical repartition is a single shuffle
-``repartition(tile_key).sortWithinPartitions(qt, id)`` (Spark's external
-sort replaces the reference's temp-file staging knobs).
+planning is deterministic driver-side bin-packing (§8.5); tile assignment
+(A11) resolves the longest-prefix lookup once per distinct cell on the
+driver and ships it as a broadcast equi-join — no Python per row; the
+sink is a single shuffle ``rebalance(tile).sortWithinPartitions(tile,
+qt, id)`` (Spark's external sort replaces the reference's temp-file
+staging knobs).
 
-Skew handling (north rule): groups emitted by the planner are bounded by
-~2*target, but a single max-depth cell can be arbitrarily hot; any group
-over ``salt_over`` rows is split into deterministic salt buckets at
-assignment time.
+Skew handling: groups emitted by the planner are bounded by ~2*target,
+but a single max-depth cell can be arbitrarily hot; the ``rebalance``
+hint lets AQE split such a tile's shuffle partition by map output, so
+this module keeps no bucketing column or skew threshold of its own.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -242,63 +241,9 @@ def find_tree_groups(cells: pd.DataFrame, target: int = GROUP_TARGET,
     return out.sort_values("tile").reset_index(drop=True)
 
 
-def assign_tiles(df: DataFrame, groups: pd.DataFrame, qt_col: str = "qt",
-                 out: str = "tile", salt_over: int | None = None,
-                 salt_out: str = "tile_salt") -> DataFrame:
-    """A11: longest-prefix tile assignment via a broadcast sorted key set.
-
-    Vectorized kernel: for each depth d (deepest first) compute
-    ``qt_round(qt, d)`` and test membership in the broadcast group-key set;
-    first hit wins.  18 hash probes per row, all numpy, Arrow-batched.
-
-    If ``salt_over`` is set, rows in groups heavier than it also get a
-    deterministic salt bucket column so one hot tile spreads over
-    ceil(weight/salt_over) shuffle partitions (skew handling).
-    """
-    spark = df.sparkSession
-    tiles = groups["tile"].to_numpy(np.int64)
-    weights = groups["weight"].to_numpy(np.int64)
-    bc = spark.sparkContext.broadcast((tiles, weights))
-    do_salt = salt_over is not None
-    salt_over_i = int(salt_over) if do_salt else 0
-
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    fields = df.schema.fieldNames()
-    extra = [StructField(out, LongType())]
-    if do_salt:
-        extra.append(StructField(salt_out, IntegerType()))
-    # df.schema is cached on the DataFrame and StructType.add mutates in
-    # place — always build a fresh StructType here.
-    schema_out = StructType(list(df.schema.fields) + extra)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tile_arr, w_arr = bc.value
-        tile_sorted = np.sort(tile_arr)
-        wmap = dict(zip(tile_arr.tolist(), w_arr.tolist()))
-        for b in batches:
-            qt = b[qt_col].to_numpy(np.int64)
-            assigned = longest_prefix_assign(qt, tile_sorted)
-            b = b.copy()
-            b[out] = assigned
-            if do_salt:
-                w = np.array([wmap.get(int(t), 0) for t in assigned])
-                nbuck = np.maximum(1, -(-w // salt_over_i))
-                row_h = (pd.util.hash_pandas_object(
-                    b[fields[0]], index=False).to_numpy(np.uint64)
-                    % nbuck.astype(np.uint64)).astype(np.int32)
-                b[salt_out] = row_h
-            yield b
-
-    return df.mapInPandas(fn, schema=schema_out)
-
-
-def assign_tiles_broadcast(df: DataFrame, cells: pd.DataFrame,
-                           groups: pd.DataFrame, plan_depth: int,
-                           qt_col: str = "qt", out: str = "tile",
-                           salt_over: int | None = None,
-                           salt_out: str = "tile_salt",
-                           salt_key: str | None = None) -> DataFrame:
+def assign_tiles(df: DataFrame, cells: pd.DataFrame, groups: pd.DataFrame,
+                 plan_depth: int, qt_col: str = "qt",
+                 out: str = "tile") -> DataFrame:
     """A11 via a broadcast dimension join — zero Python in the hot path.
 
     Group roots live at depth <= ``plan_depth`` (they were planned from the
@@ -309,12 +254,7 @@ def assign_tiles_broadcast(df: DataFrame, cells: pd.DataFrame,
     search collapses to: longest_prefix_assign over the distinct cells ONCE
     on the driver (numpy, bounded), then a broadcast equi-join on the
     rounded key.  Spark plans it as a broadcast hash join inside whole-stage
-    codegen — this is the scale path; :func:`assign_tiles` (pandas kernel)
-    remains for qt domains with no precomputed cell histogram.
-
-    Salting: groups heavier than ``salt_over`` get ceil(weight/salt_over)
-    buckets; the bucket is ``xxhash64(salt_key) % nbuck`` (JVM-side), with
-    ``salt_key`` defaulting to the first column of ``df``.
+    codegen.
     """
     spark = df.sparkSession
     cell_arr = cells["cell"].to_numpy(np.int64)
@@ -333,26 +273,14 @@ def assign_tiles_broadcast(df: DataFrame, cells: pd.DataFrame,
     compact = (((cu >> np.uint64(shift)) << np.uint64(5))
                | (cu & np.uint64(31))).astype(np.int64)
     dim = pd.DataFrame({"__cell_pd": compact, out: assigned})
-    if salt_over is not None:
-        wmap = dict(zip(groups["tile"].tolist(), groups["weight"].tolist()))
-        dim["__nbuck"] = np.maximum(
-            1, -(-np.array([wmap.get(int(t), 0) for t in assigned])
-                 // int(salt_over))).astype(np.int32)
     dim_df = F.broadcast(spark.createDataFrame(dim))
-    joined = df.withColumn(
+    return df.withColumn(
         "__c_raw", Q.qt_round_dyn(F.col(qt_col), F.lit(plan_depth))
     ).withColumn(
         "__cell_pd",
         F.shiftleft(F.shiftrightunsigned(F.col("__c_raw"), shift), 5)
         .bitwiseOR(F.col("__c_raw").bitwiseAND(F.lit(31)))
-    ).join(dim_df, "__cell_pd").drop("__c_raw")
-    if salt_over is not None:
-        key = salt_key or df.columns[0]
-        joined = joined.withColumn(
-            salt_out,
-            F.pmod(F.xxhash64(F.col(key)), F.col("__nbuck")).cast("int"),
-        ).drop("__nbuck")
-    return joined.drop("__cell_pd")
+    ).join(dim_df, "__cell_pd").drop("__c_raw", "__cell_pd")
 
 
 def iter_tree(tree: "QuadtreeTree"):
@@ -366,8 +294,7 @@ def iter_tree(tree: "QuadtreeTree"):
 
 def run_sortblocks(df: DataFrame, out_path: str, qt_col: str = "qt",
                    target: int = GROUP_TARGET, min_target: int | None = None,
-                   max_qt_level: int = 17,
-                   salt_over: int | None = None) -> pd.DataFrame:
+                   max_qt_level: int = 17) -> pd.DataFrame:
     """Reference ``run_sortblocks`` convenience (__init__.py:142-180):
     plan tile groups from the qt column, assign every row its group tile,
     and write the tiled parquet store in one call.  The reference's
@@ -382,38 +309,31 @@ def run_sortblocks(df: DataFrame, out_path: str, qt_col: str = "qt",
     lt("prepare quadtree tree")
     groups = find_tree_groups(cells, target=target, min_target=min_target)
     lt("find tree groups")
-    write_tiled(df, out_path, groups, qt_col=qt_col, salt_over=salt_over,
-                cells=cells, plan_depth=depth)
+    write_tiled(df, out_path, groups, cells, depth, qt_col=qt_col)
     lt("sort blocks")
     print(lt)
     return groups
 
 
 def write_tiled(df: DataFrame, path: str, groups: pd.DataFrame,
-                qt_col: str = "qt", order_cols: tuple[str, ...] = ("qt",),
-                salt_over: int | None = None,
-                cells: pd.DataFrame | None = None,
-                plan_depth: int | None = None) -> DataFrame:
-    """S14 sink: assign tiles, one shuffle on (tile[, salt]), sort within
-    partitions by (qt, order), write parquet partitioned by tile.
+                cells: pd.DataFrame, plan_depth: int, qt_col: str = "qt",
+                order_cols: tuple[str, ...] = ("qt",)) -> DataFrame:
+    """S14 sink: assign tiles from the plan's own depth-``plan_depth``
+    ``cells`` histogram, one ``rebalance`` shuffle on tile, sort within
+    partitions by (tile, order), write parquet partitioned by tile.
 
-    With ``cells`` + ``plan_depth`` (the histogram the plan was built
-    from — run_sortblocks always has it) the assignment is the zero-Python
-    :func:`assign_tiles_broadcast` equi-join; without them it falls back
-    to the pandas-kernel :func:`assign_tiles`.
-
-    The shuffle replaces the reference's temp-file staging (splitat/limit/
-    fsplit knobs, src/readpbf.rs:694-700) — Spark spills automatically.
+    Each file is sorted by ``order_cols``: the partitioned writer needs its
+    input ordered by ``tile`` and, because the sort leads with it, adds no
+    sort of its own that would discard the order.  ``rebalance`` lets AQE
+    split a hot tile's partition into several files and coalesce light
+    ones.  The shuffle replaces the reference's temp-file staging
+    (splitat/limit/fsplit knobs, src/readpbf.rs:694-700) — Spark spills
+    automatically.
     """
-    if cells is not None and plan_depth is not None:
-        tiled = assign_tiles_broadcast(df, cells, groups, plan_depth,
-                                       qt_col=qt_col, salt_over=salt_over)
-    else:
-        tiled = assign_tiles(df, groups, qt_col=qt_col, salt_over=salt_over)
-    keys = ["tile", "tile_salt"] if salt_over is not None else ["tile"]
+    tiled = assign_tiles(df, cells, groups, plan_depth, qt_col=qt_col)
     (
-        tiled.repartition(*[F.col(k) for k in keys])
-        .sortWithinPartitions(*order_cols)
+        tiled.hint("rebalance", "tile")
+        .sortWithinPartitions("tile", *order_cols)
         .write.mode("overwrite").partitionBy("tile").parquet(path)
     )
     return tiled

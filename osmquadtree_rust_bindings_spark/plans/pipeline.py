@@ -6,7 +6,8 @@ resumable stages:
   calcqts   run_calcqts: lon/lat + bbox/point qt + coarse cell
   tileplan  prepare_quadtree_tree + find_tree_groups (driver-side plan,
             persisted as a tiny parquet so resume reuses the exact plan)
-  tiled     assign_tiles_broadcast over tileplan's cell histogram
+  tiled     assign_tiles: broadcast equi-join over tileplan's cell
+            histogram (no shuffle, so nothing here to balance)
   counts    per-tile Count fingerprint (the pipeline checksum, §5.2)
 
 Each stage goes through Lineage.run_stage: skipped when already complete
@@ -29,12 +30,11 @@ from osmquadtree_rust_bindings_spark.operators import tiling as T
 class TilingPipeline:
     def __init__(self, spark: SparkSession, workdir: str,
                  run_id: str | None = None, group_target: int = T.GROUP_TARGET,
-                 group_depth: int = 17, salt_over: int | None = None):
+                 group_depth: int = 17):
         self.spark = spark
         self.lineage = Lineage(workdir, run_id)
         self.group_target = group_target
         self.group_depth = group_depth
-        self.salt_over = salt_over
 
     def run(self, images: DataFrame) -> dict[str, DataFrame]:
         spark = self.spark
@@ -73,9 +73,7 @@ class TilingPipeline:
             # is a broadcast equi-join (zero Python in the hot path)
             cells = (planned[0] if planned
                      else T.prepare_quadtree_tree(calc, "qt", plan_depth))
-            return T.assign_tiles_broadcast(calc, cells, groups_pdf,
-                                            plan_depth,
-                                            salt_over=self.salt_over)
+            return T.assign_tiles(calc, cells, groups_pdf, plan_depth)
 
         tiled = lin.run_stage(spark, "tiled", assign)
         # O(tiles) rows: a one-task sort, no range-partition sampling job

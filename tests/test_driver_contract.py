@@ -2,6 +2,12 @@
 and compare row-count + sorted values against its DuckDB oracle at sf0.001.
 """
 
+import glob
+import os
+import subprocess
+import sys
+import textwrap
+
 import duckdb
 import numpy as np
 import pandas as pd
@@ -9,6 +15,7 @@ import pytest
 
 import __spark_entry__ as entrymod
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -67,3 +74,34 @@ def test_query_matches_oracle(spark, duck, name):
     assert len(got) == len(exp), f"{name} rows {len(got)} vs {len(exp)}"
     pd.testing.assert_frame_equal(got, exp, check_dtype=False,
                                   check_exact=True)
+
+
+def test_gate_temp_dirs_removed_at_exit(tmp_path):
+    # x4 writes a qts copy per call; after two calls in a fresh process
+    # and its exit, the process temp dir must hold none of them
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from pyspark.sql import SparkSession
+        from osmquadtree_rust_bindings_spark import driver_queries as DQ
+        spark = (SparkSession.builder.master("local[2]")
+                 .config("spark.sql.shuffle.partitions", "4")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        for _ in range(2):
+            print("num", DQ.q_x4_prefix_range_count(
+                spark, {SF_DIR!r}).collect()[0]["num"])
+        print("root", DQ._gate_root())
+        spark.stop()
+    """)
+    env = dict(os.environ, TMPDIR=str(tmp))
+    r = subprocess.run([sys.executable, "-c", script], env=env,
+                       capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-4000:]
+    out = r.stdout.splitlines()
+    assert sum(ln.startswith("num ") for ln in out) == 2
+    root = [ln.split(" ", 1)[1] for ln in out if ln.startswith("root ")][0]
+    assert root.startswith(str(tmp))
+    assert not os.path.exists(root)
+    assert glob.glob(str(tmp / "**" / "x4_qts_*"), recursive=True) == []

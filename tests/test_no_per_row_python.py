@@ -48,3 +48,9 @@ def test_driver_side_materialization_is_bounded():
         assert n <= allowed, (
             f"{rel}: {n} driver-side materializations (allowed {allowed}) — "
             "big-path operators must stay distributed")
+
+
+def test_tile_assignment_has_no_python_kernel():
+    # one assignment path: the broadcast cell join, no Arrow round trip
+    src = dict(_sources())["operators/tiling.py"]
+    assert "mapInPandas" not in src

@@ -1,7 +1,11 @@
 """T2/T3: calc_qts over the image table + tiling engine vs pandas oracle."""
 
+import glob
+import os
+
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -212,8 +216,8 @@ def test_group_weights_bounded(calc):
 def test_assign_tiles_matches_longest_prefix(calc):
     cells = T.prepare_quadtree_tree(calc, "qt", maxdepth=17)
     groups = T.find_tree_groups(cells, target=200)
-    tiled = T.assign_tiles(calc, groups).select("image_id", "qt", "tile") \
-        .toPandas().sort_values("image_id")
+    tiled = T.assign_tiles(calc, cells, groups, 17) \
+        .select("image_id", "qt", "tile").toPandas().sort_values("image_id")
     tree = T.QuadtreeTree()
     for t in groups.tile:
         tree.add(int(t), 0)
@@ -231,32 +235,42 @@ def test_write_tiled_partition_layout(spark, calc, tmp_path):
     cells = T.prepare_quadtree_tree(calc, "qt", maxdepth=17)
     groups = T.find_tree_groups(cells, target=500)
     path = str(tmp_path / "tiled")
-    T.write_tiled(calc.drop("bytes"), path, groups,
+    T.write_tiled(calc.drop("bytes"), path, groups, cells, 17,
                   order_cols=("qt", "image_id"))
     back = spark.read.parquet(path)
     assert back.count() == N
-    # partition column round-trips and rows are sorted within files
+    # partition column round-trips
     one = back.filter(F.col("tile") == int(groups.tile.iloc[1]))
-    pdf = one.toPandas()
-    assert len(pdf) == int(groups.weight.iloc[1])
+    assert one.count() == int(groups.weight.iloc[1])
+    # every file is sorted by the order columns
+    files = glob.glob(os.path.join(path, "tile=*", "*.parquet"))
+    assert files
+    for f in files:
+        pdf = pq.read_table(f, columns=["qt", "image_id"]).to_pandas()
+        keys = list(zip(pdf.qt, pdf.image_id))
+        assert keys == sorted(keys), f"{f} is not sorted by (qt, image_id)"
 
 
-def test_salting_spreads_hot_tile(spark):
-    # all rows in one cell -> single group; salt must split it
+def test_rebalance_splits_hot_tile(spark, tmp_path):
+    # all rows at one location -> one tile far over target; a small
+    # advisory partition size makes AQE's rebalance split it over files
     pdf = I.make_images_pdf(0, 2000, with_bytes=False)
     pdf["phash"] = pdf.phash.iloc[0]  # same location for everyone
-    sdf = CQ.run_calcqts(spark.createDataFrame(pdf))
+    # AQE splits a partition by map output, so the write needs several maps
+    sdf = CQ.run_calcqts(spark.createDataFrame(pdf).repartition(4))
     cells = T.prepare_quadtree_tree(sdf, "qt", 17)
     groups = T.find_tree_groups(cells, target=400)
-    tiled = T.assign_tiles(sdf, groups, salt_over=250)
-    dist = tiled.groupBy("tile", "tile_salt").count().toPandas()
     hot = groups.loc[groups.weight.idxmax()]
-    assert hot.weight > 250
-    hot_dist = dist[dist.tile == hot.tile]
-    assert hot_dist.tile_salt.nunique() >= 2
-    assert hot_dist["count"].max() <= 250 * 2  # roughly balanced buckets
-    # light tiles keep a single bucket
-    light = dist[dist.tile.isin(groups[(groups.weight > 0)
-                                       & (groups.weight <= 250)].tile)]
-    if len(light):
-        assert light.tile_salt.nunique() == 1
+    assert hot.weight > 400
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    path = str(tmp_path / "hot")
+    try:
+        T.write_tiled(sdf, path, groups, cells, 17)
+    finally:
+        spark.conf.set(key, old)
+    hot_files = glob.glob(os.path.join(path, f"tile={int(hot.tile)}",
+                                       "*.parquet"))
+    assert len(hot_files) >= 2
+    assert spark.read.parquet(path).count() == 2000
