@@ -202,6 +202,24 @@ def q_a3_members_stats(spark, sf_dir):
     return out.select(*[F.col(c).cast("long").alias(c) for c in out.columns])
 
 
+def _split_ceiling(spark: SparkSession, sizes: list[int]) -> int:
+    """Number of file splits Spark cuts ``sizes`` into: each file in chunks
+    of ``min(maxPartitionBytes, max(openCostInBytes, bytesPerCore))``, where
+    bytesPerCore spreads every file plus its open cost over the minimum
+    partition count (FilePartition.maxSplitBytes)."""
+    import math
+
+    conf = spark.conf.get
+    max_pb = _conf_bytes(conf("spark.sql.files.maxPartitionBytes", "128m"))
+    open_cost = _conf_bytes(conf("spark.sql.files.openCostInBytes", "4m"))
+    min_parts = int(conf("spark.sql.files.minPartitionNum", None)
+                    or conf("spark.sql.leafNodeDefaultParallelism", None)
+                    or spark.sparkContext.defaultParallelism)
+    per_core = (sum(sizes) + len(sizes) * open_cost) // min_parts
+    split = min(max_pb, max(open_cost, per_core))
+    return sum(math.ceil(sz / split) for sz in sizes)
+
+
 def q_a4_num_blocks(spark, sf_dir):
     """A4 num_blocks (reference ``src/count.rs:352-355``): the raw
     partition count has no SQL twin (it depends on Spark's file-split
@@ -211,18 +229,17 @@ def q_a4_num_blocks(spark, sf_dir):
     - ``num_blocks_ge_1``: the scan produced at least one block;
     - ``num_blocks_le_rows``: every counted block held >=1 row (the
       distinct-partition-id formulation only sees non-empty partitions);
-    - ``num_blocks_le_split_ceiling``: num_blocks <= sum over input files
-      of ceil(file_bytes / spark.sql.files.maxPartitionBytes) — Spark
-      packs splits into partitions, never the reverse, so the split count
-      is a hard ceiling computed here from the real file listing + live
-      session conf (not a constant).
+    - ``num_blocks_le_split_ceiling``: num_blocks <= the number of file
+      splits, :func:`_split_ceiling` — Spark packs splits into
+      partitions, never the reverse, so the split count is a hard ceiling
+      computed here from the real file listing + live session conf (not
+      a constant).
 
     Engine-side all three are computed from the actual plan; the oracle
     derives the same booleans from the one fact SQL can see (the table is
     non-empty).  A regression in partition enumeration (0 blocks, empty
     phantom blocks, or splits multiplying past the ceiling) flips a
     boolean and fails the hash."""
-    import math
     import os as _os
 
     li = _read(spark, sf_dir, "lineitem")
@@ -232,9 +249,7 @@ def q_a4_num_blocks(spark, sf_dir):
                  for f in _os.listdir(path) if f.endswith(".parquet")]
     else:
         sizes = [_os.path.getsize(path)]
-    max_pb = _conf_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    ceiling = sum(math.ceil(sz / max_pb) for sz in sizes)
+    ceiling = _split_ceiling(spark, sizes)
     nb = CNT.num_blocks(li)
     rows = li.agg(F.count(F.lit(1)).alias("n_rows"))
     return nb.crossJoin(rows).select(
@@ -737,13 +752,11 @@ def q_a11_assign_invariants(spark, sf_dir):
 
 
 def q_j11_bbox_small(spark, sf_dir):
-    # per-operator form for bench.py: the small J11 form alone, so the
+    # per-operator form for bench.py: the pandas-input J11 alone, so the
     # bench series stays comparable across rounds after the gate merged
-    # in the batch twin (same pattern as q_ann_l2_topk / q_text_quality)
+    # in the DataFrame input (same pattern as q_ann_l2_topk / q_text_quality)
     pts = _pts_with_qt(spark, sf_dir)
-    boxes = _bbox_queries()
-    return SJ.bbox_join(pts, boxes, point_id="rowkey",
-                        batch_threshold=len(boxes) + 1).select(
+    return SJ.bbox_join(pts, _bbox_queries(), point_id="rowkey").select(
         F.col("qid").cast("long").alias("qid"),
         F.col("rowkey").cast("long").alias("rowkey"))
 
@@ -751,25 +764,19 @@ def q_j11_bbox_small(spark, sf_dir):
 def q_j9_pip_small(spark, sf_dir):
     # per-operator form for bench.py (see q_j11_bbox_small)
     pts = _pts_with_qt(spark, sf_dir)
-    polys = _polygons()
-    return SJ.pip_join(pts, polys, point_id="rowkey",
-                       batch_threshold=len(polys) + 1).select(
+    return SJ.pip_join(pts, _polygons(), point_id="rowkey").select(
         "poly_id", F.col("rowkey").cast("long").alias("rowkey"))
 
 
 def q_j11_bbox_join(spark, sf_dir):
-    # merged gate: BOTH J11 forms, tagged — the small (driver-expansion +
-    # broadcast) form and bbox_join_batch (executor-side cover, the scale
-    # twin), against the same oracle replayed under each tag.  Keeps the
-    # registry inside the harness's 50-entry window while driver-verifying
-    # the batch form hash-exact (crossover: BENCH/spatial_crossover.json).
+    # merged gate: BOTH J11 input types, tagged — "small" is the pandas box
+    # set, "batch" the same boxes as a DataFrame — against the same oracle
+    # replayed under each tag.  Keeps the registry inside the harness's
+    # 50-entry window while driver-verifying both inputs hash-exact.
     pts = _pts_with_qt(spark, sf_dir)
     boxes = _bbox_queries()
-    # threshold pinned above the fixture size so the "small" tag always
-    # exercises the small code path even if the fixture grows
-    small = SJ.bbox_join(pts, boxes, point_id="rowkey",
-                         batch_threshold=len(boxes) + 1)
-    batch = SJ.bbox_join_batch(
+    small = SJ.bbox_join(pts, boxes, point_id="rowkey")
+    batch = SJ.bbox_join(
         pts, spark.createDataFrame(
             boxes[["qid", "minlon", "minlat", "maxlon", "maxlat"]]),
         point_id="rowkey")
@@ -782,14 +789,12 @@ def q_j11_bbox_join(spark, sf_dir):
 
 
 def q_j9_pip_join(spark, sf_dir):
-    # merged gate: BOTH J9 forms, tagged (see q_j11_bbox_join) — small
-    # (driver vertex broadcast) and pip_join_batch (distributed cover +
-    # verts-join refine, the scale twin)
+    # merged gate: BOTH J9 input types, tagged (see q_j11_bbox_join) —
+    # pandas (broadcast vertex dict) and DataFrame (poly_id vertex join)
     pts = _pts_with_qt(spark, sf_dir)
     polys = _polygons()
-    small = SJ.pip_join(pts, polys, point_id="rowkey",
-                        batch_threshold=len(polys) + 1)
-    batch = SJ.pip_join_batch(
+    small = SJ.pip_join(pts, polys, point_id="rowkey")
+    batch = SJ.pip_join(
         pts, spark.createDataFrame(polys[
             ["poly_id", "verts_lon", "verts_lat",
              "minlon", "minlat", "maxlon", "maxlat"]]),

@@ -76,62 +76,22 @@ def qt_common_agg(qt: Column) -> Column:
 
 
 def run_calcqts(images: DataFrame, max_qt_level: int = MAX_QT_LEVEL,
-                ground_res: int = GROUND_RES,
-                engine: str = "sql") -> DataFrame:
+                ground_res: int = GROUND_RES) -> DataFrame:
     """images table -> + (lon, lat, qt, qt_point, cell).
 
     ``qt`` is the bbox-buffered key (drives tiling, like way qts);
     ``qt_point`` the max-depth point key; ``cell`` the coarse-index cell
     (depth-CELL_LEVEL ancestor — a morton/qt key usable for pruning).
 
-    ``engine="sql"`` (default) is pure Column algebra — whole-stage-codegen
-    JVM math, fastest and shuffle-free (requires the
-    -XX:-DontCompileHugeMethods JVM flag session.get_spark sets, or the
-    18-level descent method falls out of JIT).  ``engine="arrow"`` runs ONE
-    Arrow-batched numpy pass over the kernels — the pandas-UDF twin
-    (bit-identical output; the shape every non-SQL-expressible kernel in
-    this engine uses).  For the arrow path select the columns you need
-    BEFORE calling: mapInPandas cannot be column-pruned through, so unneeded
-    wide columns (bytes, caption) would ride the Arrow channel for nothing.
+    Pure Column algebra — whole-stage-codegen JVM math, shuffle-free
+    (requires the -XX:-DontCompileHugeMethods JVM flag session.get_spark
+    sets, or the 18-level descent method falls out of JIT).
     """
-    if engine == "sql":
-        df = with_lonlat_from_phash(images)
-        df = with_footprint_bbox(df, ground_res)
-        df = Q.with_bbox_qt(df, "minlon", "minlat", "maxlon", "maxlat",
-                            max_depth=max_qt_level, out="qt")
-        df = Q.with_point_qt(df, "lon", "lat", depth=max_qt_level,
-                             out="qt_point")
-        df = df.withColumn("cell", Q.qt_round(F.col("qt_point"), CELL_LEVEL))
-        return df.drop("minlon", "minlat", "maxlon", "maxlat")
-
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from osmquadtree_rust_bindings_spark import kernels as K
-
-    out_schema = StructType(
-        list(images.schema.fields)
-        + [StructField(c, LongType()) for c in
-           ("lon", "lat", "qt", "qt_point", "cell")])
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            phash = b["phash"].to_numpy(np.int64)
-            lon, lat = K.phash_lonlat(phash)
-            dw = (b["w"].to_numpy(np.int64) * ground_res) // 2
-            dh = (b["h"].to_numpy(np.int64) * ground_res) // 2
-            qt = K.calcqts_bbox(lon - dw, lat - dh, lon + dw, lat + dh,
-                                max_depth=max_qt_level)
-            qtp = K.calcqts_point(lon, lat, max_qt_level)
-            b = b.copy()
-            b["lon"] = lon
-            b["lat"] = lat
-            b["qt"] = qt
-            b["qt_point"] = qtp
-            b["cell"] = K.qt_round(qtp, CELL_LEVEL)
-            yield b
-
-    return images.mapInPandas(fn, schema=out_schema)
+    df = with_lonlat_from_phash(images)
+    df = with_footprint_bbox(df, ground_res)
+    df = Q.with_bbox_qt(df, "minlon", "minlat", "maxlon", "maxlat",
+                        max_depth=max_qt_level, out="qt")
+    df = Q.with_point_qt(df, "lon", "lat", depth=max_qt_level,
+                         out="qt_point")
+    df = df.withColumn("cell", Q.qt_round(F.col("qt_point"), CELL_LEVEL))
+    return df.drop("minlon", "minlat", "maxlon", "maxlat")

@@ -2,11 +2,12 @@
 raster-tile <-> vector-cell assignment (J12).
 
 All four follow the same Spark-first shape (SURVEY.md §2.3): a coarse
-"cover" equi-join on grid cells (broadcast when the query side is small,
-shuffle otherwise) followed by an exact refine — the standard cover+refine
-spatial join.  The cover side pushes down as an equi-join Catalyst can plan
-(broadcast hash join / AQE skew join); the refine is either pure Column
-predicates (bbox) or a vectorized numpy kernel (PIP).
+"cover" equi-join on grid cells followed by an exact refine — the
+standard cover+refine spatial join.  bbox and PIP share one candidate
+plan: the query side's cover is exploded from its bounds in Column
+algebra and joined on the point's cell (AQE picks broadcast or shuffle,
+and splits a hot cell); the refine is a Column interval predicate (bbox)
+plus, for PIP, one vectorized numpy ray-crossing pass.
 
 Reference parity anchors:
 - bbox contains point (closed intervals)   src/elements.rs:855-860
@@ -26,290 +27,128 @@ from pyspark.sql import functions as F
 
 from osmquadtree_rust_bindings_spark import kernels as K
 from osmquadtree_rust_bindings_spark.functions import quadtree as Q
+from osmquadtree_rust_bindings_spark.functions import sqlgen
 
 COVER_DEPTH = 8  # coarse cover-grid depth for polygon/bbox joins
+_BOUNDS = ["minlon", "minlat", "maxlon", "maxlat"]
 
 
 # --------------------------------------------------------------- cell cover
+# A point and a box bound go through the SAME monotone JVM expression, so
+# a point inside a closed box lands in a cell between the box's two corner
+# cells: the cover is complete by construction.  The key
+# (ix << COVER_DEPTH) | iy is dense in [0, 4^COVER_DEPTH), which keeps the
+# broadcast hash map in its dense mode.
 
-def bbox_cover_cells(minlon, minlat, maxlon, maxlat,
-                     depth: int = COVER_DEPTH) -> list[tuple[int, int]]:
-    """All depth-``depth`` qt cells intersecting each bbox.
+def _ix(lon: str) -> str:
+    return sqlgen.grid_index(sqlgen.x_norm(lon), COVER_DEPTH)
 
-    Returns [(row_idx, cell_qt), ...].  Driver-side numpy — the query/polygon
-    side of a cover join is small by design (broadcast side).
-    """
-    minlon = np.atleast_1d(np.asarray(minlon, np.int64))
-    maxlon = np.atleast_1d(np.asarray(maxlon, np.int64))
-    minlat = np.atleast_1d(np.asarray(minlat, np.int64))
-    maxlat = np.atleast_1d(np.asarray(maxlat, np.int64))
-    n = np.int64(1) << np.int64(depth)
-    x0, y0 = K.norm_xy(minlon, minlat)
-    x1, y1 = K.norm_xy(maxlon, maxlat)
-    ix0 = np.clip(np.floor(x0 * n).astype(np.int64), 0, n - 1)
-    ix1 = np.clip(np.floor(x1 * n).astype(np.int64), 0, n - 1)
-    iy0 = np.clip(np.floor(y0 * n).astype(np.int64), 0, n - 1)
-    iy1 = np.clip(np.floor(y1 * n).astype(np.int64), 0, n - 1)
-    out = []
-    for i in range(len(ix0)):
-        xs = np.arange(ix0[i], ix1[i] + 1)
-        ys = np.arange(iy0[i], iy1[i] + 1)
-        gx, gy = np.meshgrid(xs, ys)
-        cells = K.qt_from_cell(gx.ravel(), gy.ravel(),
-                               np.full(gx.size, depth))
-        out.extend((i, int(c)) for c in cells)
-    return out
+
+def _iy(lat: str) -> str:
+    # clamped at the mercator clip (+-85.06 deg), beyond which every
+    # latitude already lands in the edge row: a bound past a pole would
+    # make ln(tan) null and drop the box from the cover
+    return sqlgen.grid_index(sqlgen.y_norm(
+        f"least(greatest({lat}, -8.506e8), 8.506e8)"), COVER_DEPTH)
+
+
+def _cover(frame: DataFrame, id_col: str) -> DataFrame:
+    """(id, bounds, cell_cov) rows, one per cover cell each box touches."""
+    keep = [id_col, *_BOUNDS]
+    return (
+        frame.selectExpr(
+            *keep, f"explode(sequence({_ix('minlon')}, {_ix('maxlon')})) AS ix")
+        .selectExpr(
+            *keep, "ix",
+            f"explode(sequence({_iy('minlat')}, {_iy('maxlat')})) AS iy")
+        .selectExpr(*keep, f"shiftleft(ix, {COVER_DEPTH}) | iy AS cell_cov")
+    )
+
+
+def _candidates(points: DataFrame, frame: DataFrame, id_col: str,
+                point_id: str) -> DataFrame:
+    """(id, point_id, lon, lat) for every point in a box, closed intervals
+    (reference bbox.contains_point / Poly.check_box)."""
+    pts = points.withColumn("cell_cov", F.expr(
+        f"shiftleft({_ix('lon')}, {COVER_DEPTH}) | {_iy('lat')}"))
+    return (
+        pts.join(_cover(frame, id_col), "cell_cov")
+        .filter(
+            (F.col("lon") >= F.col("minlon")) & (F.col("lon") <= F.col("maxlon"))
+            & (F.col("lat") >= F.col("minlat")) & (F.col("lat") <= F.col("maxlat"))
+        )
+        .select(id_col, point_id, "lon", "lat")
+    )
 
 
 # --------------------------------------------------------------- J11 bbox
 
-def bbox_join(points: DataFrame, boxes_pdf: pd.DataFrame,
-              point_id: str = "image_id", depth: int = COVER_DEPTH,
-              qt_point: str = "qt_point",
-              batch_threshold: int = 1_000) -> DataFrame:
+def bbox_join(points: DataFrame, boxes: pd.DataFrame | DataFrame,
+              point_id: str = "image_id") -> DataFrame:
     """(qid, point_id) pairs where the point lies in the query box
     (closed intervals, reference bbox.contains_point semantics).
 
-    Cover: broadcast (cell, qid[, box]) expansion joined on the point's
-    depth-``depth`` ancestor cell; refine: pure Column interval predicate.
-
-    The driver-side cover expansion + forced broadcast is the
-    small-box-set contract; at ``batch_threshold`` boxes and above it
-    auto-dispatches to :func:`bbox_join_batch` (identical output), which
-    emits cover cells executor-side and lets AQE pick the join strategy.
-    """
-    spark = points.sparkSession
-    if len(boxes_pdf) >= batch_threshold:
-        return bbox_join_batch(
-            points, spark.createDataFrame(
-                boxes_pdf[["qid", "minlon", "minlat", "maxlon", "maxlat"]]),
-            point_id=point_id, depth=depth, qt_point=qt_point)
-    cov = bbox_cover_cells(boxes_pdf.minlon.values, boxes_pdf.minlat.values,
-                           boxes_pdf.maxlon.values, boxes_pdf.maxlat.values,
-                           depth)
-    # join on the COMPACT cell index (morton bits only — cover cells are at
-    # fixed depth): raw qt keys near 2^62 defeat LongToUnsafeRowMap's dense
-    # mode and slow the broadcast probe ~10x
-    sh = 63 - 2 * depth
-    cov_pdf = pd.DataFrame(
-        [(int(boxes_pdf.qid.iloc[i]), c >> sh) for i, c in cov],
-        columns=["qid", "cell_cov"],
-    ).merge(boxes_pdf, on="qid")
-    cov_df = spark.createDataFrame(cov_pdf)
-    pts = points.withColumn(
-        "cell_cov", F.shiftrightunsigned(F.col(qt_point), sh))
-    return (
-        pts.join(F.broadcast(cov_df), "cell_cov")
-        .filter(
-            (F.col("lon") >= F.col("minlon")) & (F.col("lon") <= F.col("maxlon"))
-            & (F.col("lat") >= F.col("minlat")) & (F.col("lat") <= F.col("maxlat"))
-        )
-        .select("qid", point_id)
-    )
-
-
-def _cover_stream(frame: DataFrame, id_col: str, depth: int) -> DataFrame:
-    """Executor-side cover expansion shared by the J11/J9 batch forms:
-    (id, cell_cov, bbox bounds) rows, one per (query, covering cell),
-    emitted from a mapInPandas over the query-side partitions.
-
-    The id and bounds columns KEEP their input Spark types in the output
-    schema — hardcoding ``long`` would silently truncate float bounds,
-    making the batch refine diverge from the small form's comparison on
-    the same input (e.g. ``minlon = 55.5`` excludes ``lon = 55`` in the
-    small form but would include it after truncation)."""
-    sh = 63 - 2 * depth  # compact cell index — see bbox_join
-    dt = dict(frame.dtypes)
-    bounds = ["minlon", "minlat", "maxlon", "maxlat"]
-    schema = ", ".join([f"{id_col} {dt[id_col]}", "cell_cov long"]
-                       + [f"{c} {dt[c]}" for c in bounds])
-
-    def covers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            cov = bbox_cover_cells(b.minlon.values, b.minlat.values,
-                                   b.maxlon.values, b.maxlat.values, depth)
-            idx = np.fromiter((i for i, _ in cov), np.int64, len(cov))
-            cells = np.fromiter((c for _, c in cov), np.int64, len(cov))
-            out = {id_col: b[id_col].values[idx],
-                   "cell_cov": cells >> np.int64(sh)}
-            for c in bounds:
-                out[c] = b[c].values[idx]
-            yield pd.DataFrame(out)
-
-    return frame.select(id_col, *bounds).mapInPandas(covers, schema=schema)
-
-
-def bbox_join_batch(points: DataFrame, boxes: DataFrame,
-                    point_id: str = "image_id", depth: int = COVER_DEPTH,
-                    qt_point: str = "qt_point") -> DataFrame:
-    """J11 at batch scale: identical results to :func:`bbox_join`, but the
-    box set is a DataFrame and the cover expansion runs executor-side
-    (mapInPandas over box partitions — the same shape as
-    :func:`knn_join_batch`'s ring stage), so 10^6+ boxes never touch the
-    driver and nothing forces a broadcast: AQE picks broadcast vs
-    shuffle from the cover stream's true size, and its skew-join split
-    handles a hot cover cell (many boxes stacked over one cell).
-
-    The box bounds ride along in the cover stream (a few extra fixed-width
-    columns on ~4 rows/box), which keeps the plan a single equi-join +
-    Column refine — no second join back to the box table.
-    """
-    sh = 63 - 2 * depth  # compact cell index — see bbox_join
-    cov_df = _cover_stream(boxes, "qid", depth)
-    pts = points.withColumn(
-        "cell_cov", F.shiftrightunsigned(F.col(qt_point), sh))
-    return (
-        pts.join(cov_df, "cell_cov")
-        .filter(
-            (F.col("lon") >= F.col("minlon")) & (F.col("lon") <= F.col("maxlon"))
-            & (F.col("lat") >= F.col("minlat")) & (F.col("lat") <= F.col("maxlat"))
-        )
-        .select("qid", point_id)
-    )
+    ``boxes`` (qid + bounds) may be pandas or a DataFrame; either way it is
+    one plan: Column cover, equi-join on the cover cell, Column interval
+    refine.  Bounds keep their input types, so float bounds compare as
+    doubles."""
+    if isinstance(boxes, pd.DataFrame):
+        boxes = points.sparkSession.createDataFrame(boxes[["qid", *_BOUNDS]])
+    return _candidates(points, boxes, "qid", point_id).select("qid", point_id)
 
 
 # --------------------------------------------------------------- J9 PIP
 
-def pip_join(points: DataFrame, polygons_pdf: pd.DataFrame,
-             point_id: str = "image_id", depth: int = COVER_DEPTH,
-             qt_point: str = "qt_point",
-             batch_threshold: int = 1_000) -> DataFrame:
+def pip_join(points: DataFrame, polygons: pd.DataFrame | DataFrame,
+             point_id: str = "image_id") -> DataFrame:
     """(poly_id, point_id) pairs with the point strictly inside the polygon
     (shapely-``contains``-style boundary exclusion; reference
     Poly.contains_point, src/readpbf.rs:761-763).
 
-    Cover: polygon-bbox cells broadcast-joined on the point's cell, plus the
-    bbox prefilter (reference check_box, F5).  Refine: vectorized
-    ray-crossing kernel over candidates, grouped per polygon inside each
-    Arrow batch; polygon vertices travel via broadcast, built once per
-    executor.
+    Candidates come from :func:`bbox_join`'s plan over the polygon bboxes
+    (reference check_box); the exact refine is one vectorized
+    ray-crossing pass per polygon inside each Arrow batch.  Where the
+    vertices come from follows the input type:
 
-    The driver-side cover expansion + whole-vertex-table broadcast is
-    the small-region contract (a handful of admin polygons); at
-    ``batch_threshold`` polygons and above it auto-dispatches to
-    :func:`pip_join_batch` (identical output), which keeps both the
-    cover stream and the vertex data distributed.  Threshold set at the
-    measured crossover (BENCH/spatial_crossover.json: small/batch =
-    1.22/1.25s at 10^3, 3.46/1.77s at 10^4).
+    - pandas: they are already in driver memory, so they travel once per
+      executor in a broadcast dict.  A large ring (a ``.poly`` region
+      filter, sources/poly.py) is never copied per candidate.
+    - DataFrame: a ``poly_id`` equi-join puts each polygon's vertex
+      arrays on its candidate rows, so 10^6 geofences never touch the
+      driver.  The ``polygons`` plan is scanned twice (cover + vertices);
+      persist it first if it is expensive to compute.
     """
     spark = points.sparkSession
-    if len(polygons_pdf) >= batch_threshold:
-        return pip_join_batch(
-            points, spark.createDataFrame(polygons_pdf[
-                ["poly_id", "verts_lon", "verts_lat",
-                 "minlon", "minlat", "maxlon", "maxlat"]]),
-            point_id=point_id, depth=depth, qt_point=qt_point)
-    polys = polygons_pdf.reset_index(drop=True)
-    cov = bbox_cover_cells(polys.minlon.values, polys.minlat.values,
-                           polys.maxlon.values, polys.maxlat.values, depth)
-    sh = 63 - 2 * depth  # compact cell index — see bbox_join
-    cov_pdf = pd.DataFrame(
-        [(polys.poly_id.iloc[i], c >> sh,
-          int(polys.minlon.iloc[i]), int(polys.minlat.iloc[i]),
-          int(polys.maxlon.iloc[i]), int(polys.maxlat.iloc[i]))
-         for i, c in cov],
-        columns=["poly_id", "cell_cov", "minlon", "minlat",
-                 "maxlon", "maxlat"],
-    )
-    cov_df = spark.createDataFrame(cov_pdf)
-    verts = {
-        r.poly_id: (np.asarray(r.verts_lon, np.float64),
-                    np.asarray(r.verts_lat, np.float64))
-        for r in polys.itertuples(index=False)
-    }
-    bc = spark.sparkContext.broadcast(verts)
-
-    pts = points.withColumn(
-        "cell_cov", F.shiftrightunsigned(F.col(qt_point), sh))
-    cand = (
-        pts.join(F.broadcast(cov_df), "cell_cov")
-        .filter(
-            (F.col("lon") >= F.col("minlon")) & (F.col("lon") <= F.col("maxlon"))
-            & (F.col("lat") >= F.col("minlat")) & (F.col("lat") <= F.col("maxlat"))
-        )
-        .select("poly_id", point_id, "lon", "lat")
-    )
+    bc = None
+    if isinstance(polygons, pd.DataFrame):
+        bc = spark.sparkContext.broadcast({
+            r.poly_id: (np.asarray(r.verts_lon, np.float64),
+                        np.asarray(r.verts_lat, np.float64))
+            for r in polygons.itertuples(index=False)})
+        polygons = spark.createDataFrame(polygons[["poly_id", *_BOUNDS]])
+    cand = _candidates(points, polygons, "poly_id", point_id)
+    if bc is None:
+        cand = cand.join(
+            polygons.select("poly_id", "verts_lon", "verts_lat"), "poly_id")
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        vmap = bc.value
+        vmap = bc.value if bc is not None else None
         for b in batches:
-            keep = np.zeros(len(b), dtype=bool)
-            for pid, idx in b.groupby("poly_id").indices.items():
-                vx, vy = vmap[pid]
-                keep[idx] = K.points_in_polygon(
-                    b["lon"].to_numpy(np.float64)[idx],
-                    b["lat"].to_numpy(np.float64)[idx], vx, vy)
-            yield b.loc[keep, ["poly_id", point_id]]
-
-    id_type = dict(points.dtypes)[point_id]
-    return cand.mapInPandas(
-        refine, schema=f"poly_id string, {point_id} {id_type}")
-
-
-def pip_join_batch(points: DataFrame, polygons: DataFrame,
-                   point_id: str = "image_id", depth: int = COVER_DEPTH,
-                   qt_point: str = "qt_point") -> DataFrame:
-    """J9 at batch scale: identical results to :func:`pip_join`, but the
-    polygon set is a DataFrame — 10^6 geofences never touch the driver.
-
-    Shape: (1) cover cells + bbox bounds emitted executor-side from the
-    polygon partitions (the :func:`bbox_join_batch` cover stage — verts
-    are NOT carried, so the cover stream stays narrow); (2) one
-    equi-join + bbox Column prefilter produces candidates; (3) the
-    exact ray-crossing refine joins the vertex arrays onto the
-    candidates (poly_id equi-join — AQE broadcasts the vertex table
-    when it fits, else shuffles) and runs ONE mapInPandas over the
-    joined stream, grouping by poly_id inside each Arrow batch — the
-    small form's refine with verts read from columns instead of a
-    driver-built broadcast dict.
-
-    Measured alternative (BENCH/spatial_crossover.json history): a
-    cogroup-applyInPandas refine (verts travel once per group, no
-    duplication) invokes Python once PER POLYGON — per-group overhead
-    made 10^4 small polygons 17.6s vs 3.1s for the driver-broadcast
-    small form.  The join form duplicates each polygon's vertex arrays
-    per candidate row inside the refine exchange, which is the right
-    trade until polygons carry very large rings; vertex-heavy work
-    belongs in the small form (broadcast dict, verts shipped once per
-    executor).
-
-    Contract note: the ``polygons`` plan is scanned twice (cover
-    emission + verts join).  For polygons read straight from storage
-    that is two cheap narrow scans; if the polygon set is derived from
-    an expensive upstream computation, the CALLER should persist or
-    checkpoint it first — this function does not cache its input.
-    """
-    sh = 63 - 2 * depth  # compact cell index — see bbox_join
-    cov_df = _cover_stream(polygons, "poly_id", depth)
-    pts = points.withColumn(
-        "cell_cov", F.shiftrightunsigned(F.col(qt_point), sh))
-    cand = (
-        pts.join(cov_df, "cell_cov")
-        .filter(
-            (F.col("lon") >= F.col("minlon")) & (F.col("lon") <= F.col("maxlon"))
-            & (F.col("lat") >= F.col("minlat")) & (F.col("lat") <= F.col("maxlat"))
-        )
-        .select("poly_id", point_id, "lon", "lat")
-    )
-    id_type = dict(points.dtypes)[point_id]
-    withverts = cand.join(
-        polygons.select("poly_id", "verts_lon", "verts_lat"), "poly_id")
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b) == 0:
-                continue
             keep = np.zeros(len(b), dtype=bool)
             lon = b["lon"].to_numpy(np.float64)
             lat = b["lat"].to_numpy(np.float64)
-            for _pid, idx in b.groupby("poly_id").indices.items():
-                vx = np.asarray(b["verts_lon"].iloc[idx[0]], np.float64)
-                vy = np.asarray(b["verts_lat"].iloc[idx[0]], np.float64)
+            for pid, idx in b.groupby("poly_id").indices.items():
+                if vmap is not None:
+                    vx, vy = vmap[pid]
+                else:
+                    vx = np.asarray(b["verts_lon"].iloc[idx[0]], np.float64)
+                    vy = np.asarray(b["verts_lat"].iloc[idx[0]], np.float64)
                 keep[idx] = K.points_in_polygon(lon[idx], lat[idx], vx, vy)
             yield b.loc[keep, ["poly_id", point_id]]
 
     pid_type = dict(polygons.dtypes)["poly_id"]
-    return withverts.mapInPandas(
+    id_type = dict(points.dtypes)[point_id]
+    return cand.mapInPandas(
         refine, schema=f"poly_id {pid_type}, {point_id} {id_type}")
 
 
@@ -355,7 +194,7 @@ def knn_join(points: DataFrame, queries_pdf: pd.DataFrame,
             point_id=point_id, qt_point=qt_point, **kwargs)
     if level is None:
         level = 6
-    sh = 63 - 2 * level  # compact cell index — see bbox_join
+    sh = 63 - 2 * level  # compact cell index (morton bits only)
     pts = points.withColumn(
         "cell_knn", F.shiftrightunsigned(F.col(qt_point), sh)).select(
         "cell_knn", point_id, "lon", "lat")
@@ -588,7 +427,7 @@ def knn_join_batch(points: DataFrame, queries: DataFrame,
                 yield pd.DataFrame({"qid": out_q, "cell_knn": out_c})
 
     # qid keeps its input type (hardcoding long would break string ids
-    # and mismatch the join with qdf — same rationale as _cover_stream)
+    # and mismatch the join with qdf)
     ring_df = queries.select("qid", "lon", "lat", "k").mapInPandas(
         rings, schema=f"qid {dict(queries.dtypes)['qid']}, cell_knn long")
     qdf = queries.select("qid", F.col("lon").alias("qlon"),
@@ -632,23 +471,3 @@ def raster_vector_assign(df: DataFrame, raster_depth: int = 10,
         ).distinct()
     )
 
-
-def raster_vector_hilbert(df: DataFrame, raster_depth: int = 10,
-                          cell_level: int = 7,
-                          qt_col: str = "qt_point") -> DataFrame:
-    """Same pairs but with the vector cell as a Hilbert id (the physical
-    coarse index): adds a vectorized kernel pass to re-encode."""
-    from osmquadtree_rust_bindings_spark import cells as C
-
-    pairs = raster_vector_assign(df, raster_depth, cell_level, qt_col)
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ix, iy, _d = K.qt_to_cell(b["cell"].to_numpy(np.int64))
-            hil = (np.int64(cell_level) << np.int64(58)) | C.hilbert_d(
-                ix, iy, cell_level)
-            yield pd.DataFrame({"qt_raster": b["qt_raster"],
-                                "cell_hilbert": hil})
-
-    return pairs.mapInPandas(
-        enc, schema="qt_raster long, cell_hilbert long")

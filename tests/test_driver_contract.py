@@ -49,6 +49,35 @@ def test_conf_bytes_units(raw, want):
     assert _conf_bytes(raw) == want
 
 
+def test_a4_split_ceiling_multi_row_group(spark, tmp_path):
+    # a 50-row-group file scanned with a small open cost splits across the
+    # default parallelism, so it reads as several blocks although it is far
+    # below maxPartitionBytes: the ceiling must follow Spark's split size,
+    # not bytes / maxPartitionBytes (which gives 1 here)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from osmquadtree_rust_bindings_spark import driver_queries as DQ
+    from osmquadtree_rust_bindings_spark.operators import count as CNT
+
+    pq.write_table(pa.table({"l_orderkey": np.arange(50_000)}),
+                   str(tmp_path / "lineitem.parquet"),
+                   row_group_size=1_000, compression="none")
+    key = "spark.sql.files.openCostInBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        blocks = CNT.num_blocks(spark.read.parquet(
+            str(tmp_path / "lineitem.parquet"))).first()[0]
+        row = DQ.q_a4_num_blocks(spark, str(tmp_path)).first()
+    finally:
+        spark.conf.set(key, saved)
+    assert blocks > 1
+    assert row.asDict() == {"num_blocks_ge_1": True,
+                            "num_blocks_le_rows": True,
+                            "num_blocks_le_split_ceiling": True}
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

@@ -54,3 +54,10 @@ def test_tile_assignment_has_no_python_kernel():
     # one assignment path: the broadcast cell join, no Arrow round trip
     src = dict(_sources())["operators/tiling.py"]
     assert "mapInPandas" not in src
+
+
+def test_spatial_join_python_boundaries():
+    # the bbox/PIP cover is Column algebra; only the PIP ray-crossing
+    # refine and the kNN ring stage cross into Python
+    src = dict(_sources())["operators/spatial_join.py"]
+    assert len(re.findall(r"\.mapInPandas\(", src)) == 2

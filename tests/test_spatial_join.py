@@ -27,6 +27,46 @@ def calc(spark, images_pdf):
         "image_id", "lon", "lat", "qt", "qt_point", "cell").cache()
 
 
+def _bbox_brute(pts: pd.DataFrame, boxes: pd.DataFrame) -> pd.DataFrame:
+    """(qid, image_id) by closed-interval test of every point in every box,
+    vectorized in box chunks."""
+    plon = pts.lon.to_numpy()
+    plat = pts.lat.to_numpy()
+    ids = pts.image_id.to_numpy()
+    qids = boxes.qid.to_numpy()
+    exp_q, exp_i = [], []
+    CH = 2000
+    for lo in range(0, len(boxes), CH):
+        b = boxes.iloc[lo:lo + CH]
+        m = ((plon[None, :] >= b.minlon.values[:, None])
+             & (plon[None, :] <= b.maxlon.values[:, None])
+             & (plat[None, :] >= b.minlat.values[:, None])
+             & (plat[None, :] <= b.maxlat.values[:, None]))
+        q, j = np.nonzero(m)
+        exp_q.extend(qids[q + lo].tolist())
+        exp_i.extend(ids[j].tolist())
+    return pd.DataFrame({"qid": exp_q, "image_id": exp_i}) \
+        .sort_values(["qid", "image_id"]).reset_index(drop=True)
+
+
+def _pip_brute(pts: pd.DataFrame, polys: pd.DataFrame) -> pd.DataFrame:
+    """(poly_id, image_id) by the ray-crossing kernel over every point."""
+    plon = pts.lon.to_numpy(np.float64)
+    plat = pts.lat.to_numpy(np.float64)
+    rows = []
+    for p in polys.itertuples(index=False):
+        inside = K.points_in_polygon(
+            plon, plat, np.asarray(p.verts_lon, np.float64),
+            np.asarray(p.verts_lat, np.float64))
+        rows.extend((p.poly_id, i) for i in pts.image_id.values[inside])
+    return pd.DataFrame(rows, columns=["poly_id", "image_id"]) \
+        .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
+
+
+def _sorted(df, keys):
+    return df.toPandas().sort_values(keys).reset_index(drop=True)
+
+
 def test_bbox_join_exact(spark, calc, images_pdf):
     boxes = FX.make_bbox_queries_pdf(60)
     got = SJ.bbox_join(calc, boxes).toPandas() \
@@ -43,20 +83,22 @@ def test_bbox_join_exact(spark, calc, images_pdf):
     pd.testing.assert_frame_equal(got, exp)
 
 
-def test_bbox_join_batch_matches_small_form(spark, calc):
+def test_bbox_join_dataframe_matches_pandas_input(spark, calc, images_pdf):
+    # the box set as pandas or as a DataFrame runs the same plan and
+    # returns the brute-force pairs
     boxes = FX.make_bbox_queries_pdf(60)
-    a = SJ.bbox_join(calc, boxes).toPandas() \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
-    b = SJ.bbox_join_batch(calc, spark.createDataFrame(
-        boxes[["qid", "minlon", "minlat", "maxlon", "maxlat"]])).toPandas() \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    exp = _bbox_brute(images_pdf, boxes)
+    assert len(exp) > 0
+    a = _sorted(SJ.bbox_join(calc, boxes), ["qid", "image_id"])
+    b = _sorted(SJ.bbox_join(calc, spark.createDataFrame(boxes)),
+                ["qid", "image_id"])
+    pd.testing.assert_frame_equal(a, exp)
+    pd.testing.assert_frame_equal(b, exp)
 
 
 def test_bbox_join_batch_large_box_set(spark, calc, images_pdf):
-    # 2*10^4 boxes entering via bbox_join must auto-dispatch to the
-    # batch form (executor-side cover, no driver expansion / forced
-    # broadcast) and equal the vectorized brute-force oracle
+    # 2*10^4 boxes as a DataFrame (cover exploded executor-side, nothing
+    # on the driver) equal the vectorized brute-force oracle
     rng = np.random.default_rng(17)
     nb = 20_000
     w = rng.integers(1_000_000, 200_000_000, nb)
@@ -68,34 +110,19 @@ def test_bbox_join_batch_large_box_set(spark, calc, images_pdf):
         "minlon": cx - w, "minlat": cy - h,
         "maxlon": cx + w, "maxlat": cy + h,
     })
-    got = SJ.bbox_join(calc, boxes).toPandas() \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
-    plon = images_pdf.lon.to_numpy(np.int64)
-    plat = images_pdf.lat.to_numpy(np.int64)
-    ids = images_pdf.image_id.to_numpy()
-    exp_q, exp_i = [], []
-    CH = 2000
-    for lo in range(0, nb, CH):
-        hi = min(nb, lo + CH)
-        m = ((plon[None, :] >= boxes.minlon.values[lo:hi, None])
-             & (plon[None, :] <= boxes.maxlon.values[lo:hi, None])
-             & (plat[None, :] >= boxes.minlat.values[lo:hi, None])
-             & (plat[None, :] <= boxes.maxlat.values[lo:hi, None]))
-        q, j = np.nonzero(m)
-        exp_q.extend((q + lo).tolist())
-        exp_i.extend(ids[j].tolist())
-    exp = pd.DataFrame({"qid": exp_q, "image_id": exp_i}) \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
+    got = _sorted(SJ.bbox_join(calc, spark.createDataFrame(boxes)),
+                  ["qid", "image_id"])
+    exp = _bbox_brute(images_pdf, boxes)
     assert len(exp) > 0
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 
 def test_bbox_join_batch_float_bounds(spark, calc, images_pdf):
-    # _cover_stream preserves input column types: float bounds must
-    # compare as doubles in the batch refine exactly like the small
-    # form.  Boxes are anchored 0.5 units past real point coordinates,
-    # so truncating bounds to long would wrongly include each box's
-    # anchor point — this pins the non-truncating behavior.
+    # the cover preserves input column types: float bounds must compare
+    # as doubles in the refine for both input types.  Boxes are anchored
+    # 0.5 units past real point coordinates, so truncating bounds to long
+    # would wrongly include each box's anchor point — this pins the
+    # non-truncating behavior.
     p = images_pdf.iloc[:20]
     boxes = pd.DataFrame({
         "qid": np.arange(20),
@@ -104,23 +131,100 @@ def test_bbox_join_batch_float_bounds(spark, calc, images_pdf):
         "maxlon": p.lon.values + 200_000_000.5,
         "maxlat": p.lat.values + 50_000_000.5,
     })
-    small = SJ.bbox_join(calc, boxes).toPandas() \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
-    batch = SJ.bbox_join_batch(calc, spark.createDataFrame(
-        boxes[["qid", "minlon", "minlat", "maxlon", "maxlat"]])).toPandas() \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
-    rows = []
-    for b in boxes.itertuples(index=False):
-        m = ((images_pdf.lon >= b.minlon) & (images_pdf.lon <= b.maxlon)
-             & (images_pdf.lat >= b.minlat) & (images_pdf.lat <= b.maxlat))
-        rows.extend((b.qid, iid) for iid in images_pdf.image_id[m])
-    exp = pd.DataFrame(rows, columns=["qid", "image_id"]) \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
+    small = _sorted(SJ.bbox_join(calc, boxes), ["qid", "image_id"])
+    batch = _sorted(SJ.bbox_join(calc, spark.createDataFrame(boxes)),
+                    ["qid", "image_id"])
+    exp = _bbox_brute(images_pdf, boxes)
     # every anchor point sits 0.5 below its box's minlon: must be absent
     anchor_pairs = set(zip(range(20), p.image_id))
     assert not (set(zip(batch.qid, batch.image_id)) & anchor_pairs)
     pd.testing.assert_frame_equal(batch, exp, check_dtype=False)
     pd.testing.assert_frame_equal(small, exp, check_dtype=False)
+
+
+def _cover_edge_fixture():
+    """Points and boxes on depth-8 cover-cell boundaries, at lon +-180 and
+    past the mercator clip (+-85.06 deg)."""
+    n = 1 << SJ.COVER_DEPTH
+    # lon cell edges are exact in 1e-7 deg; lat edges are rounded, so each
+    # is taken with its two neighbours to straddle the boundary
+    lon_edges = [k * 3_600_000_000 // n - 1_800_000_000
+                 for k in (0, 1, 37, 128, 129, 200, 255, 256)]
+    lat_edges = [int(round(float(K.inv_merc_y(2.0 * j / n - 1.0)) * 1e7))
+                 for j in (1, 40, 127, 128, 129, 200, 255)]
+    lons = sorted({v + d for v in lon_edges for d in (-1, 0, 1)
+                   if abs(v + d) <= 1_800_000_000})
+    lats = sorted({v + d for v in lat_edges for d in (-1, 0, 1)}
+                  | {s * v for s in (-1, 1)
+                     for v in (850_511_288, 850_600_000, 890_000_000,
+                               900_000_000)})
+    glon, glat = np.meshgrid(lons, lats)
+    pts = pd.DataFrame({"lon": glon.ravel(), "lat": glat.ravel()})
+    pts["image_id"] = [f"p{i:05d}" for i in range(len(pts))]
+    e_lo, e_la = lon_edges, lat_edges
+    boxes = [
+        (e_lo[1], e_la[1], e_lo[3], e_la[3]),    # edges on cell edges
+        (e_lo[3], e_la[2], e_lo[4], e_la[4]),    # one cell column wide
+        (e_lo[2], e_la[3], e_lo[5], e_la[3]),    # zero-height, on an edge
+        (e_lo[4], e_la[4], e_lo[4], e_la[4]),    # a single corner point
+        (e_lo[0], e_la[5], e_lo[1], 900_000_000),   # lon -180, past clip
+        (e_lo[6], -900_000_000, e_lo[7], e_la[1]),  # lon +180, past clip
+        (e_lo[0], -900_000_000, e_lo[7], 900_000_000),  # whole world
+        (e_lo[5], 850_600_000, e_lo[7], 900_000_000),   # beyond the clip
+        (e_lo[2], -1_000_000_000, e_lo[6], 1_000_000_000),  # past the poles
+        (e_lo[5], e_la[1], e_lo[2], e_la[4]),    # inverted lon
+        (e_lo[1], e_la[4], e_lo[5], e_la[1]),    # inverted lat
+    ]
+    boxes = pd.DataFrame(boxes, columns=["minlon", "minlat",
+                                         "maxlon", "maxlat"])
+    boxes.insert(0, "qid", np.arange(len(boxes)))
+    return pts, boxes
+
+
+def test_cover_edges_match_brute_force(spark):
+    pts, boxes = _cover_edge_fixture()
+    sdf = spark.createDataFrame(pts)
+    exp = _bbox_brute(pts, boxes)
+    for src in (boxes, spark.createDataFrame(boxes)):
+        got = _sorted(SJ.bbox_join(sdf, src), ["qid", "image_id"])
+        pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    # every point on the edge of a box counts (closed intervals) ...
+    assert len(exp[exp.qid == 6]) == len(pts)
+    assert len(exp[exp.qid == 3]) == 1
+    # ... and inverted boxes match nothing
+    assert not exp.qid.isin([9, 10]).any()
+
+    # polygons whose vertices (and so bbox edges) sit on the same cell
+    # edges; the corner points are boundary points, excluded by PIP
+    polys = []
+    for b in boxes.itertuples(index=False):
+        if b.minlon >= b.maxlon or b.minlat >= b.maxlat:
+            continue
+        vx = [b.minlon, b.maxlon, b.maxlon, b.minlon]
+        vy = [b.minlat, b.minlat, b.maxlat, b.maxlat]
+        polys.append((f"r{b.qid}", vx, vy, b.minlon, b.minlat,
+                      b.maxlon, b.maxlat))
+        polys.append((f"t{b.qid}", vx[:3], vy[:3], b.minlon, b.minlat,
+                      b.maxlon, b.maxlat))
+    polys = pd.DataFrame(polys, columns=[
+        "poly_id", "verts_lon", "verts_lat",
+        "minlon", "minlat", "maxlon", "maxlat"])
+    exp = _pip_brute(pts, polys)
+    assert len(exp) > 0
+    for src in (polys, spark.createDataFrame(polys)):
+        got = _sorted(SJ.pip_join(sdf, src), ["poly_id", "image_id"])
+        pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+
+
+@pytest.mark.parametrize("nb", [100, 20_000])
+def test_bbox_join_plan_has_no_python(spark, calc, nb):
+    # one plan at every box count: the cover is Column algebra, so no
+    # Python worker runs anywhere in the executed plan
+    df = SJ.bbox_join(calc, FX.make_bbox_queries_pdf(nb))
+    assert len(df.collect()) > 0
+    plan = _executed_plan(df)
+    assert "isFinalPlan=true" in plan
+    assert "MapInPandas" not in plan and "Python" not in plan
 
 
 def test_pip_join_exact(spark, calc, images_pdf):
@@ -142,24 +246,25 @@ def test_pip_join_exact(spark, calc, images_pdf):
     pd.testing.assert_frame_equal(got, exp)
 
 
-def test_pip_join_batch_matches_small_form(spark, calc):
+def test_pip_join_dataframe_matches_pandas_input(spark, calc, images_pdf):
+    # broadcast-dict vertices (pandas) and vertex-join vertices
+    # (DataFrame) both return the brute-force pairs
     polys = FX.make_polygons_pdf(80)
-    a = SJ.pip_join(calc, polys).toPandas() \
-        .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
-    b = SJ.pip_join_batch(calc, spark.createDataFrame(polys[
-        ["poly_id", "verts_lon", "verts_lat",
-         "minlon", "minlat", "maxlon", "maxlat"]])).toPandas() \
-        .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    exp = _pip_brute(images_pdf, polys)
+    assert len(exp) > 0
+    a = _sorted(SJ.pip_join(calc, polys), ["poly_id", "image_id"])
+    b = _sorted(SJ.pip_join(calc, spark.createDataFrame(polys)),
+                ["poly_id", "image_id"])
+    pd.testing.assert_frame_equal(a, exp)
+    pd.testing.assert_frame_equal(b, exp)
 
 
 def test_pip_join_batch_large_polygon_set(spark, calc, images_pdf):
-    # 6*10^3 polygons entering via pip_join must auto-dispatch to the
-    # batch form (distributed cover + verts-join refine, no driver
-    # vertex broadcast) and equal the ray-crossing kernel oracle
+    # 6*10^3 polygons as a DataFrame (distributed cover + verts-join
+    # refine, no driver vertex broadcast) equal the ray-crossing oracle
     polys = FX.make_polygons_pdf(6_000, seed=31)
-    got = SJ.pip_join(calc, polys).toPandas() \
-        .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
+    got = _sorted(SJ.pip_join(calc, spark.createDataFrame(polys)),
+                  ["poly_id", "image_id"])
     plon = images_pdf.lon.to_numpy(np.float64)
     plat = images_pdf.lat.to_numpy(np.float64)
     rows = []
@@ -329,15 +434,6 @@ def test_raster_vector_assign(spark, calc, images_pdf):
     assert got.groupby("qt_raster").size().max() == 1
 
 
-def test_raster_vector_hilbert_roundtrip(spark, calc):
-    from osmquadtree_rust_bindings_spark import cells as C
-    got = SJ.raster_vector_hilbert(calc).toPandas()
-    # hilbert id decodes back to the morton cell's xy
-    ix, iy = C.cell_to_xy(got.cell_hilbert.to_numpy(np.int64), 7)
-    qx, qy, _ = K.qt_to_cell(K.qt_round(got.qt_raster.to_numpy(np.int64), 7))
-    assert (ix == qx).all() and (iy == qy).all()
-
-
 def test_hilbert_cells_roundtrip():
     from osmquadtree_rust_bindings_spark import cells as C
     rng = np.random.default_rng(0)
@@ -363,8 +459,8 @@ def test_k_ring_covers_block():
 # ---- hot-cell skew fixtures (SURVEY §7 risk 3; VERDICT r04 item 3) ----
 # A dense city block at 100TB scale = 10^5+ queries stacked over ONE
 # depth-8 cover cell: the cell_cov equi-join key is maximally skewed.
-# These pin (a) batch output == small-form output on exactly that shape,
-# and (b) that AQE's skew-join split actually engages on the hot cell
+# These pin (a) DataFrame-input output == brute force on exactly that
+# shape, and (b) that AQE's skew-join split actually engages on the hot cell
 # once the cover stream is too big to broadcast (forced here by conf so
 # the mechanism is exercised at test scale; thresholds are the knobs a
 # 100TB deployment would leave at their defaults of 256MB/64MB).
@@ -416,22 +512,19 @@ def _hot_boxes(images_pdf, nb: int = 100_000) -> pd.DataFrame:
 def test_bbox_join_batch_hot_cell_skew(spark, calc, images_pdf):
     boxes = _hot_boxes(images_pdf)
     # the stack really is one hot cell (>95% of cover rows on one key)
-    cov = SJ._cover_stream(
-        spark.createDataFrame(boxes), "qid", SJ.COVER_DEPTH)
+    cov = SJ._cover(spark.createDataFrame(boxes), "qid")
     counts = cov.groupBy("cell_cov").count().toPandas()["count"]
     assert counts.max() / counts.sum() > 0.95
 
-    small = SJ.bbox_join(calc, boxes, batch_threshold=10**9).toPandas() \
-        .sort_values(["qid", "image_id"]).reset_index(drop=True)
-    assert len(small) > 0
+    exp = _bbox_brute(images_pdf, boxes)
+    assert len(exp) > 0
     with _forced_shuffle_skew(spark):
-        batch = SJ.bbox_join_batch(
-            calc, spark.createDataFrame(boxes))
+        batch = SJ.bbox_join(calc, spark.createDataFrame(boxes))
         got = pd.DataFrame(
             batch.collect(), columns=["qid", "image_id"]) \
             .sort_values(["qid", "image_id"]).reset_index(drop=True)
         plan = _executed_plan(batch)
-    pd.testing.assert_frame_equal(got, small, check_dtype=False)
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
     assert "isFinalPlan=true" in plan
     assert "skew=true" in plan, "AQE skew split did not engage"
     assert "skewed" in plan  # AQEShuffleRead ... skewed
@@ -459,18 +552,14 @@ def test_pip_join_batch_hot_polygon_skew(spark, calc, images_pdf):
         })
     polys = pd.DataFrame(rows)
 
-    small = SJ.pip_join(calc, polys, batch_threshold=10**9).toPandas() \
-        .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
-    assert len(small) > 0
+    exp = _pip_brute(images_pdf, polys)
+    assert len(exp) > 0
     with _forced_shuffle_skew(spark):
-        batch = SJ.pip_join_batch(
-            calc, spark.createDataFrame(polys[
-                ["poly_id", "verts_lon", "verts_lat",
-                 "minlon", "minlat", "maxlon", "maxlat"]]))
+        batch = SJ.pip_join(calc, spark.createDataFrame(polys))
         got = pd.DataFrame(
             batch.collect(), columns=["poly_id", "image_id"]) \
             .sort_values(["poly_id", "image_id"]).reset_index(drop=True)
         plan = _executed_plan(batch)
-    pd.testing.assert_frame_equal(got, small, check_dtype=False)
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
     assert "isFinalPlan=true" in plan
     assert "skew=true" in plan, "AQE skew split did not engage"
