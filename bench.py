@@ -1,5 +1,6 @@
 """Per-round benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the host's
+CPU count).
 
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
@@ -38,11 +39,7 @@ HEADLINE = [
     "s14_tile_counts",      # tiling aggregation
     "j11_bbox_join",        # spatial joins (join rows)
     "j9_pip_join",
-    "j10_knn_join",         # r04+: times the BATCH form (gate switched per
-                            # round-3 review) — pays the density-histogram
-                            # scan at 10 queries by design (README perf
-                            # rules 17-18; crossover ~10^3 queries, 10^6
-                            # rung in BENCH/knn_crossover.json)
+    "j10_knn_join",         # one plan, DataFrame queries (README rule 17)
     "j12_raster_vector",
     "j1_semi_join_cascade",
     "j6_diff_summary",
@@ -126,13 +123,14 @@ def ambient_delta(before, after, gc0, gc1, wall: float) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from osmquadtree_rust_bindings_spark.session import get_spark
+    from osmquadtree_rust_bindings_spark.session import (
+        default_cpus, get_spark)
     import __spark_entry__ as entrymod
 
+    cpus = default_cpus()
+
     spark = get_spark(f"local[{cpus}]", app_name="osmquadtree-bench",
-                      shuffle_partitions=int(cpus))
+                      shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     from osmquadtree_rust_bindings_spark import driver_queries as DQ
     from osmquadtree_rust_bindings_spark.session import ensure_shipped
@@ -238,7 +236,7 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "rows_per_sec": round(metric_rows / total, 1),
         "metric_rows": metric_rows,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "steady_value": steady_total,
         "steady_queries": steady,
         "steady_rows_per_sec": round(metric_rows / steady_total, 1),

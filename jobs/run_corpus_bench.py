@@ -18,8 +18,7 @@ own working set).  The shared-JVM form this replaced produced measured
 2-3x swings on identical code (old-gen aging + the previous pass's async
 shuffle-file deletion landing inside the next pass's clock: simhash 81.5s
 standalone vs 299-349s mid-suite at 20M docs) and forced a one-size heap
-that helped minhash (~2x) while costing simhash ~2x.  `--shared-jvm`
-keeps the old in-process mode for A/B measurement.
+that helped minhash (~2x) while costing simhash ~2x.
 
 Per-stage heap (the working-set story, measured at 20M docs):
 - minhash caches the N x bands band stream and shuffles alongside it:
@@ -198,18 +197,6 @@ def _stage_df(spark, stage: str, args):
     raise ValueError(f"unknown stage {stage!r}")
 
 
-def _get_stage_spark(args):
-    from osmquadtree_rust_bindings_spark.session import get_spark
-
-    # rdd.compress: the 10M-doc minhash pass caches a ~400M-row shingle
-    # stream; uncompressed disk-spilled cache blocks + two concurrent
-    # full-width shuffles overran a 59GB /tmp (measured).  Compressing
-    # cached blocks keeps the soak inside commodity local-disk headroom.
-    spark = get_spark(extra_conf={"spark.rdd.compress": "true"})
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
-
-
 class _LineProgress:
     """Line-oriented ProgressPercent for subprocess logs: one PROGRESS
     line per >=5-point advance on stderr (flushed), instead of the
@@ -248,8 +235,14 @@ def run_stage(args) -> None:
     runs under the Messenger/StatusTracker bridge (progress.job_progress)
     so long soaks emit live PROGRESS lines the orchestrator forwards."""
     from osmquadtree_rust_bindings_spark.progress import job_progress
+    from osmquadtree_rust_bindings_spark.session import get_spark
 
-    spark = _get_stage_spark(args)
+    # rdd.compress: the 10M-doc minhash pass caches a ~400M-row shingle
+    # stream; uncompressed disk-spilled cache blocks + two concurrent
+    # full-width shuffles overran a 59GB /tmp (measured).  Compressing
+    # cached blocks keeps the soak inside commodity local-disk headroom.
+    spark = get_spark(extra_conf={"spark.rdd.compress": "true"})
+    spark.sparkContext.setLogLevel("ERROR")
     msngr = _line_messenger()
     if args.stage == "gen":
         t0 = time.time()
@@ -384,12 +377,13 @@ def _wait_scratch_stable() -> None:
 def run_orchestrated(args) -> dict:
     """One spark-submit --py-files JVM per stage (north-rule deployment
     shape), per-stage heap, fresh page-cache-friendly sequencing."""
-    from osmquadtree_rust_bindings_spark.session import build_pyfiles_zip
+    from osmquadtree_rust_bindings_spark.session import (
+        build_pyfiles_zip, default_cpus)
 
     zp = build_pyfiles_zip()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     res: dict = {"docs": args.docs, "vecs": args.vecs, "isolated": True,
-                 "cpus": int(cpus)}
+                 "cpus": cpus}
     # --only X = the heap/codec probe shape: one fresh spark-submit JVM
     # running exactly one measured stage (gen is prepended — idempotent,
     # it no-ops on an existing _SUCCESS corpus).  This is the invocation
@@ -481,36 +475,6 @@ def run_orchestrated(args) -> dict:
     return res
 
 
-def run_shared_jvm(args) -> dict:
-    """Legacy single-JVM mode (A/B baseline for the isolation claim)."""
-    spark = _get_stage_spark(args)
-    # gen inline
-    if not os.path.exists(DOCS_PATH + f"_{args.docs}/_SUCCESS"):
-        gen_documents(spark, args.docs).write.mode("overwrite") \
-            .parquet(DOCS_PATH + f"_{args.docs}")
-    if not os.path.exists(VECS_PATH + f"_{args.vecs}/_SUCCESS"):
-        gen_embeddings(spark, args.vecs).write.mode("overwrite") \
-            .parquet(VECS_PATH + f"_{args.vecs}")
-    res: dict = {"docs": args.docs, "vecs": args.vecs, "isolated": False,
-                 "cpus": spark.sparkContext.defaultParallelism}
-    for stage in STAGES[1:]:
-        df = _stage_df(spark, stage, args)
-        print(f"PASS {stage} start", flush=True)
-        t0 = time.time()
-        n = df.count()
-        res[stage] = {"stage": stage, "rows": n,
-                      "sec": round(time.time() - t0, 2)}
-        print(f"PASS {stage} done {res[stage]}", flush=True)
-        # drop cached intermediates + force the ContextCleaner to delete
-        # finished shuffle files NOW, then wait for the unlinks
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        _wait_scratch_stable()
-        spark.sparkContext._jvm.System.gc()
-    spark.stop()
-    return res
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=1_000_000)
@@ -524,8 +488,6 @@ def main() -> None:
                     help="orchestrate ONE stage (gen prepended) in the "
                          "fresh-spark-submit-JVM probe shape; honors "
                          "SPARK_*_MEM + OSMQT_STAGE_CONF")
-    ap.add_argument("--shared-jvm", action="store_true",
-                    help="legacy all-stages-in-one-JVM mode (A/B baseline)")
     args = ap.parse_args()
 
     if args.stage and args.only:
@@ -534,10 +496,7 @@ def main() -> None:
     if args.stage:
         run_stage(args)
         return
-    if args.only and args.shared_jvm:
-        ap.error("--only is an orchestrated (fresh-JVM) probe shape; "
-                 "it has no meaning with --shared-jvm")
-    res = run_shared_jvm(args) if args.shared_jvm else run_orchestrated(args)
+    res = run_orchestrated(args)
 
     if args.only:  # single-stage probe: no cross-stage planted checks
         print("RESULT " + json.dumps(res))

@@ -27,7 +27,8 @@ def main() -> None:
     ap.add_argument("query", nargs="?", help="queries() key")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--out", default=None, help="parquet output dir")
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    ap.add_argument("--cpus", type=int, default=None,
+                    help="task slots (default: session.default_cpus)")
     ap.add_argument("--show", type=int, default=10)
     ap.add_argument("--list", action="store_true")
     args = ap.parse_args()
@@ -42,11 +43,12 @@ def main() -> None:
     if args.query not in qs:
         sys.exit(f"unknown query {args.query!r}; use --list")
 
-    from osmquadtree_rust_bindings_spark.session import get_spark
+    from osmquadtree_rust_bindings_spark.session import (
+        default_cpus, get_spark)
 
-    spark = get_spark(f"local[{args.cpus}]",
-                      app_name=f"osmqt-query-{args.query}",
-                      shuffle_partitions=int(args.cpus))
+    cpus = args.cpus or default_cpus()
+    spark = get_spark(f"local[{cpus}]", app_name=f"osmqt-query-{args.query}",
+                      shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
     df = qs[args.query](spark, args.sf_dir)

@@ -137,7 +137,7 @@ def main() -> None:
     # directory that would silently skip regeneration and feed the levels
     # a corpus with no files
     if not os.path.exists(os.path.join(CORPUS, "_SUCCESS")):
-        spark = get_spark("local[32]", app_name="osmqt-scaling-gen")
+        spark = get_spark(app_name="osmqt-scaling-gen")
         spark.sparkContext.setLogLevel("ERROR")
         I.generate_images(spark, N_IMAGES, num_partitions=256,
                           with_bytes=False).write.mode(

@@ -808,14 +808,12 @@ def q_j9_pip_join(spark, sf_dir):
 
 
 def q_j10_knn_join(spark, sf_dir):
-    # gate pins the BATCH form (knn_join_batch): the single-plan variant a
-    # large query set auto-dispatches to — no driver convergence loop.
-    # Output proven identical to the round-looped knn_join on this exact
-    # fixture (tests/test_spatial_join.py::test_knn_join_batch_matches_
-    # loop_form), so the oracle is unchanged.
-    pts = _pts_with_qt(spark, sf_dir)
-    out = SJ.knn_join_batch(pts, spark.createDataFrame(_knn_queries()),
-                            point_id="rowkey")
+    # DataFrame queries: the ring radii come from knn_join's one
+    # mapInPandas (pandas queries get them on the driver, same plan
+    # otherwise; tests pin both input types against brute force)
+    pts = _pts(spark, sf_dir)
+    out = SJ.knn_join(pts, spark.createDataFrame(_knn_queries()),
+                      point_id="rowkey")
     return out.select(F.col("qid").cast("long").alias("qid"),
                       F.col("rank").cast("long").alias("rank"),
                       F.col("rowkey").cast("long").alias("rowkey"))

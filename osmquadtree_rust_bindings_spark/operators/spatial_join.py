@@ -7,7 +7,9 @@ standard cover+refine spatial join.  bbox and PIP share one candidate
 plan: the query side's cover is exploded from its bounds in Column
 algebra and joined on the point's cell (AQE picks broadcast or shuffle,
 and splits a hot cell); the refine is a Column interval predicate (bbox)
-plus, for PIP, one vectorized numpy ray-crossing pass.
+plus, for PIP, one vectorized numpy ray-crossing pass.  kNN keys points
+by the same cell; each query's ring of cells is sized from a density
+histogram in one vectorized numpy pass and exploded in Column algebra.
 
 Reference parity anchors:
 - bbox contains point (closed intervals)   src/elements.rs:855-860
@@ -29,7 +31,7 @@ from osmquadtree_rust_bindings_spark import kernels as K
 from osmquadtree_rust_bindings_spark.functions import quadtree as Q
 from osmquadtree_rust_bindings_spark.functions import sqlgen
 
-COVER_DEPTH = 8  # coarse cover-grid depth for polygon/bbox joins
+COVER_DEPTH = 8  # coarse cover-grid depth for bbox, PIP and kNN joins
 _BOUNDS = ["minlon", "minlat", "maxlon", "maxlat"]
 
 
@@ -65,12 +67,14 @@ def _cover(frame: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+_POINT_CELL = f"shiftleft({_ix('lon')}, {COVER_DEPTH}) | {_iy('lat')}"
+
+
 def _candidates(points: DataFrame, frame: DataFrame, id_col: str,
                 point_id: str) -> DataFrame:
     """(id, point_id, lon, lat) for every point in a box, closed intervals
     (reference bbox.contains_point / Poly.check_box)."""
-    pts = points.withColumn("cell_cov", F.expr(
-        f"shiftleft({_ix('lon')}, {COVER_DEPTH}) | {_iy('lat')}"))
+    pts = points.withColumn("cell_cov", F.expr(_POINT_CELL))
     return (
         pts.join(_cover(frame, id_col), "cell_cov")
         .filter(
@@ -154,299 +158,177 @@ def pip_join(points: DataFrame, polygons: pd.DataFrame | DataFrame,
 
 # --------------------------------------------------------------- J10 kNN
 
-def knn_join(points: DataFrame, queries_pdf: pd.DataFrame,
-             point_id: str = "image_id", level: int | None = None,
-             qt_point: str = "qt_point", max_rounds: int = 8,
-             batch_threshold: int = 1000) -> DataFrame:
-    """k nearest points per query: ring-expansion cover join + exact
-    haversine re-rank (window), iterated until the k-th distance is within
-    the ring guarantee radius.  Ties broken by ascending ``point_id``.
+def _box_counts(integ: np.ndarray, n: int, cx: np.ndarray, cy: np.ndarray,
+                r: np.ndarray) -> np.ndarray:
+    """Point counts in the Chebyshev-``r`` boxes around cells (cx, cy),
+    from the integral image ``integ`` of an n x n (x, y) grid.  x wraps
+    modulo n (antimeridian) as at most two column intervals; y is
+    clipped."""
+    y0 = np.maximum(0, cy - r)
+    y1 = np.minimum(n - 1, cy + r) + 1
+    full = 2 * r + 1 >= n
+    x0 = np.where(full, 0, (cx - r) % n)
+    x1 = np.where(full, n - 1, (cx + r) % n)
+    wrap = x0 > x1
 
-    Mercator cells are locally square, so a point outside the Chebyshev-r
-    ring around the query's level-L cell is at least
-    min(r * (2*pi*R / 2^L) * min(cos(lat)), R * asin(cos(lat_q) *
-    sin(r * 2*pi / 2^L))) meters away — the per-round guarantee
-    (meridional band term + exact zonal cross-track term; see
-    :func:`knn_join_batch` for the derivation).
-    Each round only re-runs unsatisfied queries with doubled r; the points
-    side is probed via a broadcast (cell -> qid) expansion, so every round
-    is one broadcast join + window over candidates, no cross join ever.
+    def cols(a, b):  # columns a..b inclusive, rows y0..y1-1
+        return (integ[b + 1, y1] - integ[a, y1]
+                - integ[b + 1, y0] + integ[a, y0])
 
-    The driver convergence loop materializes each round's top-k to decide
-    which queries are satisfied — the right contract for a handful of
-    queries (few rounds, tiny collects).  At ``batch_threshold`` queries
-    and above it auto-dispatches to :func:`knn_join_batch`, the single-plan
-    form with no driver materialization at all (identical output — pinned
-    by tests and the shared driver gate).
-
-    ``level=None`` picks the form's own default: 6 for the loop (coarse
-    cells keep the doubling-ring convergence within ``max_rounds`` even
-    for empty regions), 8 for the batch form (finer cells bound the
-    candidate fan-out — the exact result is level-independent)."""
-    from pyspark.sql.window import Window
-
-    spark = points.sparkSession
-    if len(queries_pdf) >= batch_threshold:
-        kwargs = {} if level is None else {"level": level}
-        return knn_join_batch(
-            points, spark.createDataFrame(
-                queries_pdf[["qid", "lon", "lat", "k"]]),
-            point_id=point_id, qt_point=qt_point, **kwargs)
-    if level is None:
-        level = 6
-    sh = 63 - 2 * level  # compact cell index (morton bits only)
-    pts = points.withColumn(
-        "cell_knn", F.shiftrightunsigned(F.col(qt_point), sh)).select(
-        "cell_knn", point_id, "lon", "lat")
-
-    remaining = queries_pdf.copy()
-    results = []
-    r = 1
-    for _ in range(max_rounds):
-        if len(remaining) == 0:
-            break
-        # ring cells for each remaining query (driver-side, queries small)
-        qlon = remaining.lon.to_numpy(np.int64)
-        qlat = remaining.lat.to_numpy(np.int64)
-        n = np.int64(1) << np.int64(level)
-        x, y = K.norm_xy(qlon, qlat)
-        cx = np.clip(np.floor(x * n).astype(np.int64), 0, n - 1)
-        cy = np.clip(np.floor(y * n).astype(np.int64), 0, n - 1)
-        rows = []
-        for i, q in enumerate(remaining.qid.tolist()):
-            # x wraps at the antimeridian (haversine distance wraps too);
-            # y is clipped (mercator domain is cut at +-85 deg, no data beyond)
-            xs = np.unique(np.arange(cx[i] - r, cx[i] + r + 1) % int(n))
-            ys = np.arange(max(0, cy[i] - r), min(int(n) - 1, cy[i] + r) + 1)
-            gx, gy = np.meshgrid(xs, ys)
-            cells = K.qt_from_cell(gx.ravel(), gy.ravel(),
-                                   np.full(gx.size, level))
-            rows.extend((int(q), int(c) >> sh) for c in cells)
-        ring_df = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["qid", "cell_knn"]))
-        qdf = spark.createDataFrame(
-            remaining.rename(columns={"lon": "qlon", "lat": "qlat"}))
-        cand = (
-            pts.join(F.broadcast(ring_df), "cell_knn")
-            .join(F.broadcast(qdf), "qid")
-            .withColumn("dist_m", Q.haversine_m(
-                F.col("lon"), F.col("lat"), F.col("qlon"), F.col("qlat")))
-        )
-        w = Window.partitionBy("qid").orderBy(F.col("dist_m").asc(),
-                                              F.col(point_id).asc())
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= F.col("k"))
-            .select("qid", "rank", point_id, "dist_m", "k")
-        )
-        got = topk.toPandas()
-        # guarantee: ring covers everything within r cells in every direction
-        counts = got.groupby("qid").agg(found=("rank", "max"),
-                                        kth=("dist_m", "max"))
-        sat_ids = []
-        for row in remaining.itertuples(index=False):
-            g = counts.loc[row.qid] if row.qid in counts.index else None
-            # widest |lat| the ring box reaches, for the min-cos bound
-            iy = int(np.clip(np.floor(
-                K.norm_xy(row.lon, row.lat)[1] * n), 0, int(n) - 1))
-            y_edge = max(abs(2.0 * ((iy - r) / float(n)) - 1.0),
-                         abs(2.0 * ((iy + r + 1) / float(n)) - 1.0))
-            lat_edge = K.inv_merc_y(min(y_edge, 1.0))
-            cos_e = np.cos(np.radians(min(abs(float(lat_edge)), 89.9)))
-            # exclusion lower bound, exact in both axes (see
-            # knn_join_batch): meridional r*C*cos_e plus the zonal
-            # cross-track term R*asin(cos(lat_q)*sin(dlam)) — the
-            # linear r*C*cos_e alone overestimates the zonal minimum
-            # once the ring spans a sizable longitude arc
-            r_earth = 6_371_000.0
-            cos_q = np.cos(np.radians(row.lat / float(K.COORD_SCALE)))
-            mer = r * (2 * np.pi * r_earth / float(n)) * cos_e
-            zon = r_earth * np.arcsin(cos_q * np.sin(
-                min(r * 2 * np.pi / float(n), np.pi / 2)))
-            guarantee = min(mer, zon)
-            if r >= int(n):  # ring covers the whole grid: take what exists
-                sat_ids.append(row.qid)
-            elif g is not None and g.found >= row.k and g.kth <= guarantee:
-                sat_ids.append(row.qid)
-        sat = got[got.qid.isin(sat_ids)]
-        results.append(sat[["qid", "rank", point_id, "dist_m"]])
-        remaining = remaining[~remaining.qid.isin(sat_ids)]
-        r *= 2
-    if len(remaining):
-        raise RuntimeError(
-            f"kNN did not converge for {len(remaining)} queries "
-            f"within {max_rounds} rounds")
-    out = pd.concat(results, ignore_index=True)
-    return spark.createDataFrame(out)
+    return (cols(x0, np.where(wrap, n - 1, x1))
+            + np.where(wrap, cols(np.zeros_like(x1), x1), 0))
 
 
-def knn_join_batch(points: DataFrame, queries: DataFrame,
-                   point_id: str = "image_id", level: int = 8,
-                   qt_point: str = "qt_point") -> DataFrame:
-    """J10 at batch scale: identical results to :func:`knn_join`, but ALL
-    queries resolve in ONE plan — no driver convergence loop, no
-    per-round materialization, queries as a DataFrame (10^5+ fine).
+def _ring_radius(integ: np.ndarray, n: int, cx: np.ndarray, cy: np.ndarray,
+                 k: np.ndarray, lat: np.ndarray) -> np.ndarray:
+    """Each query's ring radius ``rf`` in cells: every point outside the
+    Chebyshev-``rf`` ring around the query's cell (cx, cy) is farther
+    than its k-th nearest neighbour, so one ring join is exact.  ``lat``
+    is the query latitude in degrees.  Vectorized: each step moves the
+    radius of the queries still unsatisfied, never one query at a time.
 
-    Shape:
-    1. one narrow aggregation builds the level-``level`` cell histogram
-       (<= 4^level rows — plan-sized, driver-bounded by construction);
-    2. a mapInPandas over the QUERY side (histogram shipped via a Spark
-       broadcast variable) derives each query's ring radius from the
-       density — the smallest Chebyshev radius whose cumulative ring
-       count covers k (integral-image lookup, O(1) per probe), enlarged
-       until the ring guarantee radius exceeds the candidate-distance
-       bound (sqrt2 * (r_k+1) cells at equator scale >= any haversine
-       distance inside the covering box) — and emits the ring cells
-       executor-side;
-    3. one equi-join points -> ring cells -> queries plus one window
-       re-rank, exactly knn_join's refine.
+    1. ``rk`` is the smallest radius whose box holds k points
+       (:func:`_box_counts`; a query with k above the total takes what
+       exists: the whole grid, ``rf = n``).
+    2. The k points inside the radius-``rk`` box are at most
+       ``need = (rk+1) * sqrt2 * cos_box`` cells of C = 2piR/n ground
+       meters away: the ground length of a straight mercator segment is
+       its planar length times ``C * cos(lat)`` integrated along it, and
+       cos is maximized at the box edge nearest the equator
+       (``cos_box``; 1 when the box straddles it).
+    3. Every point OUTSIDE the Chebyshev-``rf`` ring is at least
+       ``min(rf * cos(ring-edge lat), n/2pi * asin(cos(lat_q) *
+       sin(rf * 2pi/n)))`` cells away: the meridional term integrates
+       cos over the ring's own latitude band; the zonal term is the
+       exact cross-track distance from the query to the bounding
+       meridian (the linear ``rf * cos`` form overestimates it once the
+       ring spans a sizable longitude arc, since ``asin(c sin x) <= c
+       x``).  ``rf`` starts at ``max(1, ceil(need))`` and grows until
+       this exclusion bound reaches ``need``.
 
-    The guarantee that makes the single pass exact: the k points inside
-    the radius-``r_k`` box are at most ``(r_k+1) * sqrt2 * C * cos_box``
-    ground meters away (C = 2piR/2^level) — the ground length of the
-    straight mercator segment is its planar length times ``C *
-    cos(lat)`` integrated along it, and cos is maximized at the box edge
-    nearest the equator (``cos_box``).  Every point OUTSIDE the
-    Chebyshev-``r`` ring is at least ``min(r * C * cos(ring-edge lat),
-    R * asin(cos(lat_q) * sin(r * 2pi/2^level)))`` away — the meridional
-    term integrates cos over the ring's own latitude band; the zonal
-    term is the exact cross-track distance from the query to the
-    bounding meridian (the linear ``r * C * cos`` form overestimates it
-    once the ring spans a sizable longitude arc, since ``asin(c sin x)
-    <= c x``).  Any ``r`` whose exclusion bound reaches the candidate
-    bound closes the search — per query, in one shot instead of
-    knn_join's doubling rounds.  Scaling the candidate bound by
-    ``cos_box`` (instead of the equatorial worst case ``cos_box = 1``)
-    matters enormously at latitude: without it ``r`` inflates by
-    ~1/cos(lat) — measured rf p99 of 17 vs 3 at |lat| <= 75 deg on the
-    sf0.1 fixture, a ~30x candidate-volume difference
-    (BENCH/knn_crossover.json).
+    Scaling ``need`` by ``cos_box`` (instead of the equatorial worst
+    case ``cos_box = 1``) matters enormously at latitude: without it
+    ``rf`` inflates by ~1/cos(lat) — measured rf p99 of 17 vs 3 at
+    |lat| <= 75 deg on the sf0.1 fixture, a ~30x candidate-volume
+    difference (BENCH/knn_crossover.json)."""
+    total = integ[n, n]
+    rk = np.zeros(len(cx), dtype=np.int64)
+    act = np.flatnonzero(k <= total)
+    while act.size:
+        act = act[_box_counts(integ, n, cx[act], cy[act], rk[act]) < k[act]]
+        rk[act] += 1
+    e0 = 2.0 * (cy - rk) / n - 1.0
+    e1 = 2.0 * (cy + rk + 1) / n - 1.0
+    lat_box = K.inv_merc_y(np.minimum(np.abs(e0), np.abs(e1)))
+    cos_box = np.where((e0 <= 0.0) & (0.0 <= e1), 1.0,
+                       np.cos(np.radians(np.abs(lat_box))))
+    need = (rk + 1) * np.sqrt(2.0) * cos_box
+    cos_q = np.cos(np.radians(lat))
+    rf = np.where(k <= total, np.maximum(1.0, np.ceil(need)), n) \
+        .astype(np.int64)
+    act = np.flatnonzero(rf < n)
+    while act.size:
+        r, c = rf[act], cy[act]
+        y_edge = np.maximum(np.abs(2.0 * ((c - r) / n) - 1.0),
+                            np.abs(2.0 * ((c + r + 1) / n) - 1.0))
+        lat_edge = K.inv_merc_y(np.minimum(y_edge, 1.0))
+        cos_e = np.cos(np.radians(np.minimum(np.abs(lat_edge), 89.9)))
+        mer = r * cos_e
+        zon = (n / (2.0 * np.pi)) * np.arcsin(cos_q[act] * np.sin(
+            np.minimum(r * 2.0 * np.pi / n, np.pi / 2.0)))
+        act = act[np.minimum(mer, zon) < need[act]]
+        rf[act] += 1
+        act = act[rf[act] < n]
+    return np.minimum(rf, n)
+
+
+def _with_radius(q: pd.DataFrame, integ: np.ndarray) -> pd.DataFrame:
+    """(qid, qlon, qlat, k, cx, cy, rf): each query with its depth-
+    ``COVER_DEPTH`` cell (the point key's grid, latitude clamped the same
+    way) and ring radius."""
+    n = integ.shape[0] - 1
+    lat = q["lat"].to_numpy(np.int64)
+    x, y = K.norm_xy(q["lon"].to_numpy(np.int64),
+                     np.clip(lat, -850_600_000, 850_600_000))
+    cx = np.clip(np.floor(x * n).astype(np.int64), 0, n - 1)
+    cy = np.clip(np.floor(y * n).astype(np.int64), 0, n - 1)
+    rf = _ring_radius(integ, n, cx, cy, q["k"].to_numpy(np.int64),
+                      lat / float(K.COORD_SCALE))
+    return q.rename(columns={"lon": "qlon", "lat": "qlat"}).assign(
+        cx=cx, cy=cy, rf=rf)
+
+
+def knn_join(points: DataFrame, queries: pd.DataFrame | DataFrame,
+             point_id: str = "image_id") -> DataFrame:
+    """(qid, rank, point_id, dist_m): the k nearest points per query by
+    haversine distance, ties broken by ascending ``point_id``.
+
+    ``queries`` (qid, lon, lat, k) may be pandas or a DataFrame; either
+    way it is one plan:
+
+    1. points are keyed by the bbox/PIP cover cell ``(ix << 8) | iy``
+       and one aggregation builds its histogram (<= 4^COVER_DEPTH rows),
+       turned into an integral image on the driver;
+    2. each query's ring radius comes from :func:`_ring_radius` (the
+       derivation that makes one ring exact is there).  Where it runs
+       follows the input type: on the driver for pandas queries, in one
+       ``mapInPandas`` (one row per query) for a DataFrame;
+    3. the ring cells are exploded in Column algebra (x wraps modulo the
+       grid width at the antimeridian, y is clipped), equi-joined to the
+       points' cell, and one window re-ranks candidates by distance.
+
+    A query with k above the point count takes what exists.
     """
     from pyspark.sql.window import Window
 
     spark = points.sparkSession
-    sh = 63 - 2 * level
-    n = 1 << level
-    pts = points.withColumn(
-        "cell_knn", F.shiftrightunsigned(F.col(qt_point), sh)).select(
-        "cell_knn", point_id, "lon", "lat")
-
-    hist = (pts.groupBy("cell_knn").count().toPandas())
-    grid = np.zeros((n, n), dtype=np.int64)
-    # cell_knn is qt >>> sh; rebuild a valid level-`level` key (depth in
-    # the low 5 bits) before decoding to grid coordinates
-    hx, hy, _hd = K.qt_to_cell(
-        (hist["cell_knn"].to_numpy(np.int64) << np.int64(sh))
-        | np.int64(level))
-    grid[hx, hy] = hist["count"].to_numpy(np.int64)
-    # integral image over y per x-column + x prefix: ring sums in O(1),
-    # with x wrapped modulo n (antimeridian) as <=2 interval lookups
+    n = 1 << COVER_DEPTH
+    pts = points.select(F.expr(_POINT_CELL).alias("cell_cov"), point_id,
+                        "lon", "lat")
+    hist = pts.groupBy("cell_cov").count().toPandas()
+    grid = np.zeros(n * n, dtype=np.int64)
+    grid[hist["cell_cov"].to_numpy(np.int64)] = hist["count"].to_numpy()
+    # integral image: integ[x, y] = points in cells [0, x) x [0, y)
     integ = np.zeros((n + 1, n + 1), dtype=np.int64)
-    integ[1:, 1:] = grid.cumsum(0).cumsum(1)
-    total = int(grid.sum())
-    b_int = spark.sparkContext.broadcast(integ)
+    integ[1:, 1:] = grid.reshape(n, n).cumsum(0).cumsum(1)
 
-    def box_count(ig, cx, cy, r):
-        y0, y1 = max(0, cy - r), min(n - 1, cy + r)
-        x0, x1 = cx - r, cx + r
-        if x1 - x0 + 1 >= n:
-            xa = [(0, n - 1)]
-        else:
-            x0m, x1m = x0 % n, x1 % n
-            xa = [(x0m, x1m)] if x0m <= x1m else [(x0m, n - 1), (0, x1m)]
-        s = 0
-        for a, b in xa:
-            s += (ig[b + 1, y1 + 1] - ig[a, y1 + 1]
-                  - ig[b + 1, y0] + ig[a, y0])
-        return s
+    cols = ["qid", "lon", "lat", "k"]
+    if isinstance(queries, pd.DataFrame):
+        ring = spark.createDataFrame(_with_radius(queries[cols], integ))
+    else:
+        queries = queries.select(*cols)
+        b_int = spark.sparkContext.broadcast(integ)
 
-    def rings(batches):
-        ig = b_int.value
-        for qb in batches:
-            qlon = qb["lon"].to_numpy(np.int64)
-            qlat = qb["lat"].to_numpy(np.int64)
-            ks = qb["k"].to_numpy(np.int64)
-            x, y = K.norm_xy(qlon, qlat)
-            cxs = np.clip(np.floor(x * n).astype(np.int64), 0, n - 1)
-            cys = np.clip(np.floor(y * n).astype(np.int64), 0, n - 1)
-            out_q, out_c = [], []
-            for qid, cx, cy, k, qlat_deg in zip(
-                    qb["qid"].tolist(), cxs, cys, ks,
-                    qlat / float(K.COORD_SCALE)):
-                cx, cy = int(cx), int(cy)
-                if total < k:
-                    rf = n  # take what exists: whole grid
-                else:
-                    rk = 0
-                    while box_count(ig, cx, cy, rk) < k:
-                        rk += 1
-                    # candidate-distance bound, latitude-tight: cos is
-                    # maximized at the rk-box edge nearest the equator
-                    # (cos_box = 1 when the box straddles it)
-                    e0 = 2.0 * (cy - rk) / n - 1.0
-                    e1 = 2.0 * (cy + rk + 1) / n - 1.0
-                    if e0 <= 0.0 <= e1:
-                        cos_box = 1.0
-                    else:
-                        lat_box = K.inv_merc_y(min(abs(e0), abs(e1)))
-                        cos_box = np.cos(np.radians(abs(float(lat_box))))
-                    need = (rk + 1) * np.sqrt(2.0) * cos_box
-                    cos_q = np.cos(np.radians(qlat_deg))
-                    rf = max(1, int(np.ceil(need)))
-                    while rf < n:
-                        y_edge = max(abs(2.0 * ((cy - rf) / n) - 1.0),
-                                     abs(2.0 * ((cy + rf + 1) / n) - 1.0))
-                        lat_edge = K.inv_merc_y(min(y_edge, 1.0))
-                        cos_e = np.cos(np.radians(
-                            min(abs(float(lat_edge)), 89.9)))
-                        # exclusion lower bound, exact in both axes:
-                        # meridional rf*cos_e cells; zonal via the
-                        # cross-track formula R*asin(cos(lat_q)*sin(dlam))
-                        # — the linear rf*cos form OVERestimates the
-                        # zonal minimum for rings spanning a sizable
-                        # longitude arc (asin(c*sin x) <= c*x)
-                        mer = rf * cos_e
-                        zon = (n / (2.0 * np.pi)) * np.arcsin(
-                            cos_q * np.sin(min(rf * 2.0 * np.pi / n,
-                                               np.pi / 2.0)))
-                        if min(mer, zon) >= need:
-                            break
-                        rf += 1
-                rf = min(rf, n)
-                xs = np.unique(np.arange(cx - rf, cx + rf + 1) % n)
-                ys = np.arange(max(0, cy - rf), min(n - 1, cy + rf) + 1)
-                gx, gy = np.meshgrid(xs, ys)
-                cells = K.qt_from_cell(gx.ravel(), gy.ravel(),
-                                       np.full(gx.size, level))
-                out_q.extend([qid] * len(cells))
-                out_c.extend((int(c) >> sh) for c in cells)
-                if len(out_q) >= 200_000:
-                    yield pd.DataFrame({"qid": out_q, "cell_knn": out_c})
-                    out_q, out_c = [], []
-            if out_q:
-                yield pd.DataFrame({"qid": out_q, "cell_knn": out_c})
+        def radii(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for b in batches:
+                yield _with_radius(b, b_int.value)
 
-    # qid keeps its input type (hardcoding long would break string ids
-    # and mismatch the join with qdf)
-    ring_df = queries.select("qid", "lon", "lat", "k").mapInPandas(
-        rings, schema=f"qid {dict(queries.dtypes)['qid']}, cell_knn long")
-    qdf = queries.select("qid", F.col("lon").alias("qlon"),
-                         F.col("lat").alias("qlat"), "k")
-    cand = (
-        pts.join(ring_df, "cell_knn")
-        .join(qdf, "qid")
-        .withColumn("dist_m", Q.haversine_m(
-            F.col("lon"), F.col("lat"), F.col("qlon"), F.col("qlat")))
+        # query columns keep their input types (a string qid stays one)
+        t = dict(queries.dtypes)
+        ring = queries.mapInPandas(radii, schema=(
+            f"qid {t['qid']}, qlon {t['lon']}, qlat {t['lat']}, k {t['k']},"
+            " cx long, cy long, rf long"))
+    keep = ["qid", "qlon", "qlat", "k"]
+    ring = (
+        ring.selectExpr(
+            *keep, "cy", "rf",
+            f"explode(sequence(cx - rf, cx - rf + least(2 * rf, {n - 1})))"
+            " AS ix")
+        .selectExpr(
+            *keep, "ix",
+            f"explode(sequence(greatest(0, cy - rf), least({n - 1}, cy + rf)))"
+            " AS iy")
+        .selectExpr(
+            *keep, f"shiftleft(pmod(ix, {n}), {COVER_DEPTH}) | iy AS cell_cov")
     )
+    cand = pts.join(ring, "cell_cov").withColumn("dist_m", Q.haversine_m(
+        F.col("lon"), F.col("lat"), F.col("qlon"), F.col("qlat")))
     w = Window.partitionBy("qid").orderBy(F.col("dist_m").asc(),
                                           F.col(point_id).asc())
     # Measured negative result (README perf rule 19): adding max(k) as a
     # LITERAL rank conjunct to trigger InferWindowGroupLimit made the
     # 10^5-query case ~1.4x WORSE (19.6-25.8s vs 14.3-14.8s, alternating
-    # same-session A/B).  On this plan the window piggybacks on the
-    # qid-join's existing hash partitioning, so there is no window
-    # shuffle to shrink — WindowGroupLimitExec runs Final-mode only and
-    # just inserts a non-codegen truncation pass between Sort and Window.
+    # same-session A/B, on the earlier plan with a second qid join).
     return (
         cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= F.col("k"))

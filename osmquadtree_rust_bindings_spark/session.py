@@ -85,6 +85,12 @@ def resolve_shuffle_partitions(master: str,
     return max(16, 2 * cores)
 
 
+def default_cpus() -> int:
+    """Task slots for ``local[N]``: the SPARK_GRAFT_CPUS override, else
+    the host's CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(master: str | None = None, app_name: str = "osmquadtree-spark",
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None,
@@ -93,8 +99,7 @@ def get_spark(master: str | None = None, app_name: str = "osmquadtree-spark",
     Arrow on (all kernels are Arrow-batched), package shipped to executors.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{default_cpus()}]"
     b = (
         SparkSession.builder.master(master).appName(app_name)
         # local mode: the driver JVM hosts all executor threads.  16g

@@ -12,8 +12,7 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 # plan/metrics-sized dataset, documented at the call site)
 DRIVER_SIDE_ALLOWED = {
     "plans/pipeline.py": 1,      # tile-group plan (O(groups))
-    "operators/spatial_join.py": 2,  # kNN remaining-query set (O(queries))
-                                     # + batch-kNN cell hist (O(4^level))
+    "operators/spatial_join.py": 1,  # kNN cell histogram (O(4^COVER_DEPTH))
     "operators/similarity.py": 1,    # near-dup broadcast matrix (bounded side)
     "operators/tiling.py": 2,    # depth-choice agg row + cell histogram
     "driver_queries.py": 1,      # s2_header bbox agg (one metadata row)
@@ -57,7 +56,8 @@ def test_tile_assignment_has_no_python_kernel():
 
 
 def test_spatial_join_python_boundaries():
-    # the bbox/PIP cover is Column algebra; only the PIP ray-crossing
-    # refine and the kNN ring stage cross into Python
+    # the bbox/PIP cover and the kNN ring cells are Column algebra; only
+    # the PIP ray-crossing refine and the kNN ring radii for DataFrame
+    # queries cross into Python
     src = dict(_sources())["operators/spatial_join.py"]
     assert len(re.findall(r"\.mapInPandas\(", src)) == 2

@@ -285,40 +285,53 @@ def test_pip_join_batch_large_polygon_set(spark, calc, images_pdf):
     pd.testing.assert_frame_equal(got, exp)
 
 
+def _knn_brute(pts: pd.DataFrame, queries: pd.DataFrame,
+               point_id: str = "image_id") -> pd.DataFrame:
+    """(qid, rank, point_id): the k nearest points per query by haversine
+    distance over every point, ties by ascending id."""
+    rows = []
+    for q in queries.itertuples(index=False):
+        d = K.haversine_m(pts.lon.values, pts.lat.values, q.lon, q.lat)
+        order = np.lexsort((pts[point_id].values, d))[: q.k]
+        rows.extend((q.qid, r + 1, pts[point_id].iloc[j])
+                    for r, j in enumerate(order))
+    return pd.DataFrame(rows, columns=["qid", "rank", point_id]) \
+        .sort_values(["qid", "rank"]).reset_index(drop=True)
+
+
+def _knn_both(spark, pts, queries: pd.DataFrame, **kw) -> list:
+    """knn_join's output for pandas queries (radii on the driver) and for
+    the same queries as a DataFrame (radii in mapInPandas), sorted."""
+    return [SJ.knn_join(pts, q, **kw).toPandas()
+            .sort_values(["qid", "rank"]).reset_index(drop=True)
+            for q in (queries, spark.createDataFrame(queries))]
+
+
 def test_knn_join_exact(spark, calc, images_pdf):
     queries = FX.make_knn_queries_pdf(25)
     got = SJ.knn_join(calc, queries).toPandas() \
         .sort_values(["qid", "rank"]).reset_index(drop=True)
-    rows = []
-    for q in queries.itertuples(index=False):
-        d = K.haversine_m(images_pdf.lon.values, images_pdf.lat.values,
-                          q.lon, q.lat)
-        order = np.lexsort((images_pdf.image_id.values, d))[: q.k]
-        rows.extend((q.qid, r + 1, images_pdf.image_id.iloc[j])
-                    for r, j in enumerate(order))
-    exp = pd.DataFrame(rows, columns=["qid", "rank", "image_id"]) \
-        .sort_values(["qid", "rank"]).reset_index(drop=True)
     assert (got.groupby("qid")["rank"].max().sort_index().values
             == queries.sort_values("qid").k.values).all()
     pd.testing.assert_frame_equal(
-        got[["qid", "rank", "image_id"]], exp, check_dtype=False)
+        got[["qid", "rank", "image_id"]], _knn_brute(images_pdf, queries),
+        check_dtype=False)
 
 
-def test_knn_join_batch_matches_loop_form(spark, calc):
-    # the single-plan batch variant must return EXACTLY what the
-    # round-looped knn_join returns on the gated fixture
+def test_knn_join_dataframe_matches_pandas_input(spark, calc, images_pdf):
+    # both radius paths return the same rows (distances included), and
+    # each equals brute force
     queries = FX.make_knn_queries_pdf(25)
-    a = SJ.knn_join(calc, queries).toPandas() \
-        .sort_values(["qid", "rank"]).reset_index(drop=True)
-    b = SJ.knn_join_batch(calc, spark.createDataFrame(queries)).toPandas() \
-        .sort_values(["qid", "rank"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    pdf_in, df_in = _knn_both(spark, calc, queries)
+    pd.testing.assert_frame_equal(pdf_in, df_in, check_dtype=False)
+    pd.testing.assert_frame_equal(
+        df_in[["qid", "rank", "image_id"]], _knn_brute(images_pdf, queries),
+        check_dtype=False)
 
 
 def test_knn_join_batch_large_query_set(spark, calc, images_pdf):
     # 10^5 queries resolved in one plan, FULL equality vs a vectorized
-    # brute-force oracle.  Entry via knn_join: at this size it must
-    # auto-dispatch to the batch form (no driver convergence loop).
+    # brute-force oracle, for pandas and for DataFrame queries
     rng = np.random.default_rng(99)
     nq = 100_000
     qpdf = pd.DataFrame({
@@ -327,12 +340,6 @@ def test_knn_join_batch_large_query_set(spark, calc, images_pdf):
         "lat": rng.integers(-750_000_000, 750_000_000, nq),
         "k": rng.choice([1, 3, 5], nq).astype(np.int64),
     })
-    got = SJ.knn_join(calc, qpdf).toPandas() \
-        .sort_values(["qid", "rank"]).reset_index(drop=True)
-    counts = got.groupby("qid")["rank"].max()
-    assert len(counts) == nq
-    assert (counts.sort_index().values
-            == qpdf.sort_values("qid").k.values).all()
     # oracle: image_id is zero-padded ("img{i:012d}") so the engine's
     # (dist asc, image_id asc) tie-break equals (dist asc, index asc) —
     # lexsort on (candidate index, distance) reproduces it exactly.
@@ -361,8 +368,9 @@ def test_knn_join_batch_large_query_set(spark, calc, images_pdf):
             exp_id.extend(ids[part[r, :KW][o]])
     exp = pd.DataFrame({"qid": exp_qid, "rank": exp_rank,
                         "image_id": exp_id})
-    pd.testing.assert_frame_equal(
-        got[["qid", "rank", "image_id"]], exp, check_dtype=False)
+    for got in _knn_both(spark, calc, qpdf):
+        pd.testing.assert_frame_equal(
+            got[["qid", "rank", "image_id"]], exp, check_dtype=False)
 
 
 def test_knn_high_latitude_sparse_exact(spark):
@@ -371,9 +379,7 @@ def test_knn_high_latitude_sparse_exact(spark):
     # whose exclusion test is decided by the zonal cross-track term
     # R*asin(cos(lat_q)*sin(dlam)) — the regime where the old linear
     # bound's slack (equator-scale `need`) used to hide its
-    # overestimate.  Both forms must equal brute force exactly.
-    from osmquadtree_rust_bindings_spark.functions import quadtree as Q
-
+    # overestimate.  Both input types must equal brute force exactly.
     rng = np.random.default_rng(7)
     npts = 300
     lat_deg = rng.uniform(75.0, 84.5, npts) * rng.choice([-1, 1], npts)
@@ -382,8 +388,6 @@ def test_knn_high_latitude_sparse_exact(spark):
         "lon": rng.integers(-1_799_999_999, 1_800_000_000, npts),
         "lat": np.round(lat_deg * 1e7).astype(np.int64),
     })
-    pts = Q.with_point_qt(spark.createDataFrame(pdf), "lon", "lat", 18,
-                          out="qt_point")
     nq = 40
     qlat = rng.uniform(76.0, 84.0, nq) * rng.choice([-1, 1], nq)
     qpdf = pd.DataFrame({
@@ -393,23 +397,54 @@ def test_knn_high_latitude_sparse_exact(spark):
         "k": np.tile(np.array([1, 5, 10], dtype=np.int64),
                      (nq + 2) // 3)[:nq],
     })
-    exp_rows = []
-    for q in qpdf.itertuples(index=False):
-        d = K.haversine_m(pdf.lon.values, pdf.lat.values, q.lon, q.lat)
-        order = np.lexsort((pdf.pid.values, d))[: q.k]
-        exp_rows.extend((q.qid, r + 1, pdf.pid.iloc[j])
-                        for r, j in enumerate(order))
-    exp = pd.DataFrame(exp_rows, columns=["qid", "rank", "pid"]) \
-        .sort_values(["qid", "rank"]).reset_index(drop=True)
-    loop = SJ.knn_join(pts, qpdf, point_id="pid").toPandas() \
-        .sort_values(["qid", "rank"]).reset_index(drop=True)
-    batch = SJ.knn_join_batch(pts, spark.createDataFrame(qpdf),
-                              point_id="pid").toPandas() \
-        .sort_values(["qid", "rank"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(
-        loop[["qid", "rank", "pid"]], exp, check_dtype=False)
-    pd.testing.assert_frame_equal(
-        batch[["qid", "rank", "pid"]], exp, check_dtype=False)
+    exp = _knn_brute(pdf, qpdf, "pid")
+    for got in _knn_both(spark, spark.createDataFrame(pdf), qpdf,
+                         point_id="pid"):
+        pd.testing.assert_frame_equal(
+            got[["qid", "rank", "pid"]], exp, check_dtype=False)
+
+
+def test_knn_k_exceeds_points(spark):
+    # k above the point count takes what exists (the whole-grid ring):
+    # every point comes back ranked, on both radius paths
+    pdf = pd.DataFrame({
+        "pid": [f"p{i}" for i in range(7)],
+        "lon": np.array([-1_799_000_000, -600_000_000, 0, 5, 450_000_000,
+                         1_200_000_000, 1_799_999_999], dtype=np.int64),
+        "lat": np.array([-840_000_000, -300_000_000, 0, 0, 400_000_000,
+                         845_000_000, 100_000_000], dtype=np.int64),
+    })
+    qpdf = pd.DataFrame({
+        "qid": np.arange(4),
+        "lon": np.array([0, 1_790_000_000, -1_000_000_000, 300_000_000],
+                        dtype=np.int64),
+        "lat": np.array([0, 800_000_000, -849_000_000, 200_000_000],
+                        dtype=np.int64),
+        "k": np.array([10, 10, 10, 2], dtype=np.int64),
+    })
+    exp = _knn_brute(pdf, qpdf, "pid")
+    assert (exp.groupby("qid").size().values == [7, 7, 7, 2]).all()
+    for got in _knn_both(spark, spark.createDataFrame(pdf), qpdf,
+                         point_id="pid"):
+        pd.testing.assert_frame_equal(
+            got[["qid", "rank", "pid"]], exp, check_dtype=False)
+
+
+def test_box_counts_match_slice_sum():
+    # the integral-image ring count that sizes both radius paths equals a
+    # direct slice-sum, across the antimeridian wrap and with 2r+1 >= n
+    rng = np.random.default_rng(11)
+    for n in (1, 2, 5, 8, 16):
+        grid = rng.integers(0, 5, (n, n))
+        integ = np.zeros((n + 1, n + 1), dtype=np.int64)
+        integ[1:, 1:] = grid.cumsum(0).cumsum(1)
+        cx, cy, r = (a.ravel() for a in np.meshgrid(
+            np.arange(n), np.arange(n), np.arange(n + 2), indexing="ij"))
+        exp = [np.roll(grid, r_ - x, axis=0)[:min(2 * r_ + 1, n),
+                                             max(0, y - r_):y + r_ + 1].sum()
+               for x, y, r_ in zip(cx, cy, r)]
+        np.testing.assert_array_equal(SJ._box_counts(integ, n, cx, cy, r),
+                                      exp)
 
 
 def test_knn_empty_region_expands(spark, calc):
