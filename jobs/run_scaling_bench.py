@@ -27,6 +27,7 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -35,6 +36,17 @@ N_IMAGES = int(os.environ.get("SCALING_N", "128000000"))
 CORPUS = "/tmp/osmqt_bench/images"
 LEVELS = (int(os.environ.get("SCALING_LEVEL_N", "2")),
           int(os.environ.get("SCALING_LEVEL_4N", "8")))
+
+
+def _qts_path(level: int) -> str:
+    """qts intermediate of one parallelism level, under the system temp dir
+    by default.  On a real cluster this write goes to a distributed FS
+    whose aggregate bandwidth scales with the node count; a single local
+    disk bottlenecks only the high level, so point SCALING_QTS_DIR at a
+    RAM-backed dir (tmpfs) when the host has the memory for it."""
+    base = os.environ.get("SCALING_QTS_DIR") or os.path.join(
+        tempfile.gettempdir(), "osmqt_qts")
+    return f"{base}_{level}"
 
 
 def run_job(spark) -> dict:
@@ -57,12 +69,7 @@ def run_job(spark) -> dict:
     # were the worst-scaling phase measured).  Like the reference qts file,
     # rows are keyed by an i64 id (parsed back from image_id) — writing 64M
     # 15-char strings into the intermediate costs encode/decode for nothing.
-    # qts intermediate on tmpfs: on a real cluster this write goes to a
-    # distributed FS whose aggregate bandwidth scales with the node count;
-    # the sandbox's single virtual disk (~constant MB/s regardless of
-    # cores) would bottleneck only the high-parallelism level and misstate
-    # cluster scaling.  RAM-backed keeps per-core IO bandwidth ~constant.
-    qts_path = os.environ.get("SCALING_QTS_DIR", "/dev/shm/osmqt_qts") +         f"_{spark.sparkContext.defaultParallelism}"
+    qts_path = _qts_path(spark.sparkContext.defaultParallelism)
     CQ.run_calcqts(images).select(
         F.substring("image_id", 4, 12).cast("long").alias("img_idx"),
         "lon", "lat", "qt", "qt_point").write.mode(
@@ -120,9 +127,7 @@ def child(level: int) -> None:
     res = min(runs, key=lambda r: r["wall_sec"])  # steady-state throughput
     print("RESULT " + json.dumps(res))
     spark.stop()
-    shutil.rmtree(
-        os.environ.get("SCALING_QTS_DIR", "/dev/shm/osmqt_qts")
-        + f"_{level}", ignore_errors=True)
+    shutil.rmtree(_qts_path(level), ignore_errors=True)
 
 
 def main() -> None:

@@ -103,9 +103,3 @@ def k_ring(cell, k: int, level: int = CELL_LEVEL):
     ids = (np.int64(level) << np.int64(58)) | hilbert_d(
         np.clip(xs, 0, n - 1), np.clip(ys, 0, n - 1), level)
     return np.where(valid, ids, np.int64(-1))
-
-
-def cell_size_m(level: int = CELL_LEVEL, lat_deg: float = 0.0) -> float:
-    """Approximate ground size of a cell edge at the given latitude."""
-    circumference = 40_075_016.686 * np.cos(np.radians(lat_deg))
-    return float(circumference / (1 << level))

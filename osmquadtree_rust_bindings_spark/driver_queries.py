@@ -790,7 +790,7 @@ def q_j11_bbox_join(spark, sf_dir):
 
 def q_j9_pip_join(spark, sf_dir):
     # merged gate: BOTH J9 input types, tagged (see q_j11_bbox_join) —
-    # pandas (broadcast vertex dict) and DataFrame (poly_id vertex join)
+    # pandas and DataFrame polygons, one edge-band plan
     pts = _pts_with_qt(spark, sf_dir)
     polys = _polygons()
     small = SJ.pip_join(pts, polys, point_id="rowkey")

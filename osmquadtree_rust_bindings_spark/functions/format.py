@@ -124,16 +124,6 @@ def changetype_decode(col: Column) -> Column:
     return _decode(col, CHANGETYPE_ALIAS, CHANGETYPES)
 
 
-def changetype_encode(col: Column) -> Column:
-    """full name (any case) -> 1-letter alias; unknown -> null."""
-    rev = {v: k for k, v in CHANGETYPE_ALIAS.items()}
-    low = F.lower(col)
-    out = F.lit(None).cast("string")
-    for full, short in rev.items():
-        out = F.when(low == full, F.lit(short)).otherwise(out)
-    return out
-
-
 def elementtype_decode(col: Column) -> Column:
     return _decode(col, ELEMENTTYPES, list(ELEMENTTYPES.values()))
 

@@ -68,19 +68,6 @@ def norm_xy(lon_i, lat_i):
     return x, y
 
 
-def mercator_forward(lon_i, lat_i, scale: float = 6378137.0 * np.pi / 180 * 180):
-    """lon/lat int 1e-7 deg → web-mercator meters-ish (x, y) float64.
-
-    Matches reference ``LonLat.forward`` (src/geometry.rs:176-183) up to the
-    fixed scale constant: x = lon_deg/180*scale, y = merc(lat)*scale where
-    scale defaults to the spherical-mercator half-circumference.
-    """
-    lon_i = np.asarray(lon_i, dtype=np.float64)
-    x = (lon_i / COORD_SCALE) / 180.0 * scale
-    y = merc_y(np.asarray(lat_i, np.float64) / COORD_SCALE) * scale
-    return x, y
-
-
 # ---------------------------------------------------------------- bit plumbing
 
 def _spread(v):
@@ -203,12 +190,6 @@ def qt_from_string(s):
     for i, ch in enumerate(s):
         qt |= "ABCD".index(ch) << (61 - 2 * i)
     return np.int64(qt | len(s))
-
-
-def qt_to_xyz(qt):
-    """Tuple view (x, y, z) — slippy-style (reference src/elements.rs:33)."""
-    ix, iy, d = qt_to_cell(qt)
-    return ix, iy, d
 
 
 def qt_key_range(qt):

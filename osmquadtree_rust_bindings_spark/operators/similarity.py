@@ -68,36 +68,6 @@ def l2_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     )
 
 
-def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                qid_col: str = "qid", qvec_col: str = "qvec") -> DataFrame:
-    """Brute-force cosine top-k (double math; rank ties broken by id).
-    Output: (qid, rank, vec_id, cos_sim)."""
-    def to_d(c):
-        return F.transform(c, lambda e: e.cast("double"))
-
-    e = embeddings.select(F.col(id_col), to_d(F.col(vec_col)).alias("__v"))
-    q = queries.select(F.col(qid_col), to_d(F.col(qvec_col)).alias("__q"))
-
-    def dot(a, b):
-        return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                           F.lit(0.0), lambda acc, v: acc + v)
-
-    scored = e.crossJoin(F.broadcast(q)).withColumn(
-        "cos_sim",
-        dot(F.col("__v"), F.col("__q"))
-        / F.sqrt(dot(F.col("__v"), F.col("__v")))
-        / F.sqrt(dot(F.col("__q"), F.col("__q"))),
-    )
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", id_col, "cos_sim")
-    )
-
-
 def cosine_topk_exact(embeddings: DataFrame, queries: DataFrame, k: int = 10,
                       id_col: str = "vec_id", vec_col: str = "embedding",
                       qid_col: str = "qid", qvec_col: str = "qvec"

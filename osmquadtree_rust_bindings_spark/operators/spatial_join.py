@@ -6,10 +6,12 @@ All four follow the same Spark-first shape (SURVEY.md §2.3): a coarse
 standard cover+refine spatial join.  bbox and PIP share one candidate
 plan: the query side's cover is exploded from its bounds in Column
 algebra and joined on the point's cell (AQE picks broadcast or shuffle,
-and splits a hot cell); the refine is a Column interval predicate (bbox)
-plus, for PIP, one vectorized numpy ray-crossing pass.  kNN keys points
-by the same cell; each query's ring of cells is sized from a density
-histogram in one vectorized numpy pass and exploded in Column algebra.
+and splits a hot cell); the refine is part of the join condition: a
+Column interval predicate (bbox) plus, for PIP, ray crossings over the
+polygon edges whose row band the cover row carries.  No Python worker
+runs on either path.  kNN keys points by the same cell; each query's
+ring of cells is sized from a density histogram in one vectorized numpy
+pass and exploded in Column algebra.
 
 Reference parity anchors:
 - bbox contains point (closed intervals)   src/elements.rs:855-860
@@ -55,14 +57,23 @@ def _iy(lat: str) -> str:
 
 
 def _cover(frame: DataFrame, id_col: str) -> DataFrame:
-    """(id, bounds, cell_cov) rows, one per cover cell each box touches."""
-    keep = [id_col, *_BOUNDS]
+    """(id, bounds[, edges], cell_cov) rows, one per cover cell each box
+    touches.
+
+    A frame with an ``edges`` column (PIP) keeps on each cover row only
+    the edges whose row band ``[lo, hi]`` holds that row.  Rows are
+    exploded before columns, so each band is filtered once per row and
+    never copied whole to every cell of a large ring."""
+    keep = [id_col, *_BOUNDS] + (["edges"] if "edges" in frame.columns else [])
+    rows = frame.selectExpr(
+        *keep, f"explode(sequence({_iy('minlat')}, {_iy('maxlat')})) AS iy")
+    if "edges" in keep:
+        rows = rows.withColumn(
+            "edges", F.expr("filter(edges, e -> e.lo <= iy AND iy <= e.hi)"))
     return (
-        frame.selectExpr(
-            *keep, f"explode(sequence({_ix('minlon')}, {_ix('maxlon')})) AS ix")
-        .selectExpr(
-            *keep, "ix",
-            f"explode(sequence({_iy('minlat')}, {_iy('maxlat')})) AS iy")
+        rows.selectExpr(
+            *keep, "iy",
+            f"explode(sequence({_ix('minlon')}, {_ix('maxlon')})) AS ix")
         .selectExpr(*keep, f"shiftleft(ix, {COVER_DEPTH}) | iy AS cell_cov")
     )
 
@@ -71,17 +82,19 @@ _POINT_CELL = f"shiftleft({_ix('lon')}, {COVER_DEPTH}) | {_iy('lat')}"
 
 
 def _candidates(points: DataFrame, frame: DataFrame, id_col: str,
-                point_id: str) -> DataFrame:
-    """(id, point_id, lon, lat) for every point in a box, closed intervals
-    (reference bbox.contains_point / Poly.check_box)."""
+                point_id: str, refine: str = "true") -> DataFrame:
+    """(id, point_id) for every point in a box, closed intervals
+    (reference bbox.contains_point / Poly.check_box), that also passes the
+    SQL predicate ``refine``."""
     pts = points.withColumn("cell_cov", F.expr(_POINT_CELL))
     return (
         pts.join(_cover(frame, id_col), "cell_cov")
         .filter(
             (F.col("lon") >= F.col("minlon")) & (F.col("lon") <= F.col("maxlon"))
             & (F.col("lat") >= F.col("minlat")) & (F.col("lat") <= F.col("maxlat"))
+            & F.expr(refine)
         )
-        .select(id_col, point_id, "lon", "lat")
+        .select(id_col, point_id)
     )
 
 
@@ -98,10 +111,40 @@ def bbox_join(points: DataFrame, boxes: pd.DataFrame | DataFrame,
     doubles."""
     if isinstance(boxes, pd.DataFrame):
         boxes = points.sparkSession.createDataFrame(boxes[["qid", *_BOUNDS]])
-    return _candidates(points, boxes, "qid", point_id).select("qid", point_id)
+    return _candidates(points, boxes, "qid", point_id)
 
 
 # --------------------------------------------------------------- J9 PIP
+
+# Edge i of a ring joins vertex i to vertex (i - 1) mod n, in doubles, as
+# in K.points_in_polygon.  Horizontal edges are dropped: the kernel's first
+# clause masks them, and dropping them keeps the divisor below nonzero
+# (ANSI division by zero raises).  lo/hi is the edge's row band, through
+# the same clamped grid expression the points are keyed by.  transform's
+# index walks the ring, so an empty ring has no edges (sequence(0, -1)
+# would count down and index past the end).
+_EDGES = """filter(transform(verts_lat, (v, i) -> named_struct(
+    'xi', double(verts_lon[i]), 'yi', double(v),
+    'xj', double(verts_lon[pmod(i - 1, size(verts_lat))]),
+    'yj', double(verts_lat[pmod(i - 1, size(verts_lat))]))),
+  e -> e.yi != e.yj)"""
+_BAND = f"""transform({_EDGES}, e -> named_struct(
+    'xi', e.xi, 'yi', e.yi, 'xj', e.xj, 'yj', e.yj,
+    'lo', {_iy('least(e.yi, e.yj)')}, 'hi', {_iy('greatest(e.yi, e.yj)')}))"""
+
+# The kernel's ray-crossing test, in its order of operations, over the
+# edges banded on the point's row: bit-identical to K.points_in_polygon.
+# The point enters through the accumulator, never as an outer column in
+# the lambda body: a lambda reading outer columns of both join sides was
+# seen pushed into the polygon side on Spark 4.1 (cached points), where
+# it failed to resolve ``lat``.
+_INSIDE = """aggregate(edges,
+    named_struct('x', double(lon), 'y', double(lat), 'in', false),
+    (a, e) -> named_struct('x', a.x, 'y', a.y, 'in', a.in != (
+        ((e.yi > a.y) != (e.yj > a.y))
+        AND a.x < (e.xj - e.xi) * (a.y - e.yi) / (e.yj - e.yi) + e.xi)),
+    a -> a.in)"""
+
 
 def pip_join(points: DataFrame, polygons: pd.DataFrame | DataFrame,
              point_id: str = "image_id") -> DataFrame:
@@ -109,51 +152,27 @@ def pip_join(points: DataFrame, polygons: pd.DataFrame | DataFrame,
     (shapely-``contains``-style boundary exclusion; reference
     Poly.contains_point, src/readpbf.rs:761-763).
 
-    Candidates come from :func:`bbox_join`'s plan over the polygon bboxes
-    (reference check_box); the exact refine is one vectorized
-    ray-crossing pass per polygon inside each Arrow batch.  Where the
-    vertices come from follows the input type:
+    ``polygons`` (poly_id, verts_lon, verts_lat + bounds) may be pandas or
+    a DataFrame; either way it is :func:`bbox_join`'s plan over the
+    polygon bboxes (reference check_box) with the exact refine added to
+    the join condition, all in Column algebra:
 
-    - pandas: they are already in driver memory, so they travel once per
-      executor in a broadcast dict.  A large ring (a ``.poly`` region
-      filter, sources/poly.py) is never copied per candidate.
-    - DataFrame: a ``poly_id`` equi-join puts each polygon's vertex
-      arrays on its candidate rows, so 10^6 geofences never touch the
-      driver.  The ``polygons`` plan is scanned twice (cover + vertices);
-      persist it first if it is expensive to compute.
+    1. each ring's non-horizontal edges are built once, each with its
+       row band (the depth-``COVER_DEPTH`` rows it spans);
+    2. each cover row keeps only the edges whose band holds that row.
+       An edge the point's horizontal ray crosses spans the point's
+       latitude, so it is in the band of the point's row;
+    3. ray crossings over that band, in the kernel's arithmetic, decide
+       the candidate.
+
+    A huge ring given as pandas pays for its vertices through
+    ``createDataFrame`` (README perf rule 20).
     """
-    spark = points.sparkSession
-    bc = None
     if isinstance(polygons, pd.DataFrame):
-        bc = spark.sparkContext.broadcast({
-            r.poly_id: (np.asarray(r.verts_lon, np.float64),
-                        np.asarray(r.verts_lat, np.float64))
-            for r in polygons.itertuples(index=False)})
-        polygons = spark.createDataFrame(polygons[["poly_id", *_BOUNDS]])
-    cand = _candidates(points, polygons, "poly_id", point_id)
-    if bc is None:
-        cand = cand.join(
-            polygons.select("poly_id", "verts_lon", "verts_lat"), "poly_id")
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        vmap = bc.value if bc is not None else None
-        for b in batches:
-            keep = np.zeros(len(b), dtype=bool)
-            lon = b["lon"].to_numpy(np.float64)
-            lat = b["lat"].to_numpy(np.float64)
-            for pid, idx in b.groupby("poly_id").indices.items():
-                if vmap is not None:
-                    vx, vy = vmap[pid]
-                else:
-                    vx = np.asarray(b["verts_lon"].iloc[idx[0]], np.float64)
-                    vy = np.asarray(b["verts_lat"].iloc[idx[0]], np.float64)
-                keep[idx] = K.points_in_polygon(lon[idx], lat[idx], vx, vy)
-            yield b.loc[keep, ["poly_id", point_id]]
-
-    pid_type = dict(polygons.dtypes)["poly_id"]
-    id_type = dict(points.dtypes)[point_id]
-    return cand.mapInPandas(
-        refine, schema=f"poly_id {pid_type}, {point_id} {id_type}")
+        polygons = points.sparkSession.createDataFrame(
+            polygons[["poly_id", "verts_lon", "verts_lat", *_BOUNDS]])
+    rings = polygons.selectExpr("poly_id", *_BOUNDS, f"{_BAND} AS edges")
+    return _candidates(points, rings, "poly_id", point_id, refine=_INSIDE)
 
 
 # --------------------------------------------------------------- J10 kNN
@@ -297,11 +316,13 @@ def knn_join(points: DataFrame, queries: pd.DataFrame | DataFrame,
         ring = spark.createDataFrame(_with_radius(queries[cols], integ))
     else:
         queries = queries.select(*cols)
-        b_int = spark.sparkContext.broadcast(integ)
 
+        # the integral image (~0.5 MB) travels in the pickled function;
+        # PySpark broadcasts any command above
+        # spark.broadcast.UDFCompressionThreshold (1 MiB) by itself
         def radii(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for b in batches:
-                yield _with_radius(b, b_int.value)
+                yield _with_radius(b, integ)
 
         # query columns keep their input types (a string qid stays one)
         t = dict(queries.dtypes)

@@ -197,12 +197,6 @@ def generate_images(spark, n: int, num_partitions: int = 32,
     )
 
 
-def write_images_table(spark, n: int, path: str, num_partitions: int = 32,
-                       seed: int = SEED) -> None:
-    generate_images(spark, n, num_partitions, seed).write.mode(
-        "overwrite").parquet(path)
-
-
 # ---------------------------------------------------------------- skew fixture
 
 HOTSPOTS = [(-740_059_700, 407_127_500), (23_405_000, 524_370_000),

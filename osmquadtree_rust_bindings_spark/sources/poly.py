@@ -1,6 +1,7 @@
 """Osmosis .poly polygon-filter format (reference Poly,
-/root/reference/src/readpbf.rs:718-771: ``from_file``, ``bounds``,
-``check_box``, ``contains_point`` over parallel f64 vertex arrays).
+src/readpbf.rs:718-771: ``from_file``, ``bounds``, ``check_box``,
+``contains_point`` over parallel f64 vertex arrays).  ``parse_poly``
+takes the file's text; the caller reads the file.
 
 Format::
 
@@ -17,9 +18,12 @@ Format::
 Output is the polygon frame shape consumed by
 ``operators.spatial_join.pip_join`` — one row per ring with int 1e-7-deg
 vertex arrays and the precomputed bbox (the reference's ``bounds`` /
-``check_box`` pruning data).  Holes get ``is_hole=True``; a point is
-inside the filter iff it is inside an outer ring and in no hole
-(``contains_point`` semantics).
+``check_box`` pruning data).  ``pip_join`` takes it as pandas or as a
+DataFrame; either way it splits each ring into edges in Column algebra
+and copies an edge only to the cover rows it spans, so a region ring of
+10^4-10^5 vertices is never copied whole per candidate.  Holes get
+``is_hole=True``; a point is inside the filter iff it is inside an outer
+ring and in no hole (``contains_point`` semantics).
 """
 
 from __future__ import annotations
@@ -70,13 +74,6 @@ def parse_poly(text: str, name: str | None = None) -> pd.DataFrame:
             "is_hole": is_hole,
         })
     return pd.DataFrame(rows)
-
-
-def read_poly_file(path: str) -> pd.DataFrame:
-    with open(path) as f:
-        text = f.read()
-    import os
-    return parse_poly(text, name=os.path.splitext(os.path.basename(path))[0])
 
 
 def bounds(pdf: pd.DataFrame) -> tuple[int, int, int, int]:

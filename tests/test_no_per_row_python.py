@@ -56,8 +56,9 @@ def test_tile_assignment_has_no_python_kernel():
 
 
 def test_spatial_join_python_boundaries():
-    # the bbox/PIP cover and the kNN ring cells are Column algebra; only
-    # the PIP ray-crossing refine and the kNN ring radii for DataFrame
-    # queries cross into Python
+    # the bbox/PIP cover, the PIP ray-crossing refine and the kNN ring
+    # cells are Column algebra; only the kNN ring radii for DataFrame
+    # queries cross into Python, and nothing is broadcast by hand
     src = dict(_sources())["operators/spatial_join.py"]
-    assert len(re.findall(r"\.mapInPandas\(", src)) == 2
+    assert len(re.findall(r"\.mapInPandas\(", src)) == 1
+    assert "sparkContext.broadcast" not in src

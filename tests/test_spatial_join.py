@@ -218,13 +218,81 @@ def test_cover_edges_match_brute_force(spark):
 
 @pytest.mark.parametrize("nb", [100, 20_000])
 def test_bbox_join_plan_has_no_python(spark, calc, nb):
-    # one plan at every box count: the cover is Column algebra, so no
-    # Python worker runs anywhere in the executed plan
-    df = SJ.bbox_join(calc, FX.make_bbox_queries_pdf(nb))
-    assert len(df.collect()) > 0
-    plan = _executed_plan(df)
-    assert "isFinalPlan=true" in plan
-    assert "MapInPandas" not in plan and "Python" not in plan
+    # one plan at every query count: the cover and the PIP ray-crossing
+    # refine are Column algebra, so no Python worker runs anywhere in the
+    # executed plan of bbox_join or of pip_join on either input type
+    polys = FX.make_polygons_pdf(nb)
+    for df in (SJ.bbox_join(calc, FX.make_bbox_queries_pdf(nb)),
+               SJ.pip_join(calc, polys),
+               SJ.pip_join(calc, spark.createDataFrame(polys))):
+        assert len(df.collect()) > 0
+        plan = _executed_plan(df)
+        assert "isFinalPlan=true" in plan
+        assert "MapInPandas" not in plan and "Python" not in plan
+
+
+def _ring(cx: int, cy: int, radii, n: int) -> tuple[list, list]:
+    """n vertices at angles 2*pi*i/n around (cx, cy), radius radii[i % 2]
+    (1e-7 deg): a star, so non-convex, when the two radii differ."""
+    ang = 2 * np.pi * np.arange(n) / n
+    r = np.where(np.arange(n) % 2 == 0, radii[0], radii[1])
+    return (np.round(cx + r * np.cos(ang)).astype(np.int64).tolist(),
+            np.round(cy + r * np.sin(ang)).astype(np.int64).tolist())
+
+
+def test_pip_edge_bands_match_kernel(spark):
+    # the edge-band refine gives the kernel's answer bit for bit on
+    # boundary points, long edges, a big non-convex ring and degenerate
+    # rings, for both input types and a cached points frame
+    D = 10_000_000
+    rng = np.random.default_rng(5)
+    lon = [rng.integers(-30 * D, 30 * D, 20_000)]
+    lat = [rng.integers(-80 * D, 80 * D, 20_000)]
+    # pentagon with lattice vertices: points ON its edges (vertical x = 0,
+    # horizontal y = 0, the slanted edge's exact midpoint) and at each
+    # vertex's latitude
+    pv = ([0, 2 * D, 2 * D, D, 0], [0, 0, 2 * D, 3 * D, 2 * D])
+    on_x = np.arange(-D, 3 * D + 1, D // 4)
+    for y in (0, 2 * D, 3 * D):
+        lon.append(on_x)
+        lat.append(np.full(len(on_x), y))
+    lon.append(np.zeros(9, np.int64))
+    lat.append(np.arange(0, 2 * D + 1, D // 4))
+    lon.append(np.array([3 * D // 2, 3 * D // 2 - 1, 3 * D // 2 + 1]))
+    lat.append(np.array([5 * D // 2] * 3))
+    # a thin triangle whose two long north-south edges span > 100 rows
+    tv = ([10 * D, 11 * D, 12 * D], [-70 * D, 70 * D, -70 * D])
+    lon.append(rng.integers(10 * D, 12 * D, 5_000))
+    lat.append(rng.integers(-75 * D, 75 * D, 5_000))
+    sv = _ring(-15 * D, 20 * D, (6 * D, 2 * D), 5_000)
+    pts = pd.DataFrame({"lon": np.concatenate(lon),
+                        "lat": np.concatenate(lat)})
+    pts["image_id"] = np.arange(len(pts))
+    box = (4 * D, 4 * D, 9 * D, 9 * D)
+    polys = pd.DataFrame(
+        [("pent", *pv), ("long", *tv), ("star", *sv),
+         ("one", [5 * D], [5 * D]), ("two", [4 * D, 9 * D], [4 * D, 9 * D]),
+         ("empty", [], [])],
+        columns=["poly_id", "verts_lon", "verts_lat"])
+    for c, v in zip(SJ._BOUNDS, box):
+        polys[c] = v
+    for i in range(3):
+        vx, vy = polys.verts_lon[i], polys.verts_lat[i]
+        polys.loc[i, SJ._BOUNDS] = [min(vx), min(vy), max(vx), max(vy)]
+    polys[SJ._BOUNDS] = polys[SJ._BOUNDS].astype(np.int64)
+    n = 1 << SJ.COVER_DEPTH
+    rows = np.floor((K.merc_y(np.array([-70.0, 70.0])) + 1) / 2 * n)
+    assert rows[1] - rows[0] > 100
+
+    exp = _pip_brute(pts, polys)
+    assert set(exp.poly_id) == {"pent", "long", "star"}
+    sdf = spark.createDataFrame(pts).cache()
+    try:
+        for src in (polys, spark.createDataFrame(polys)):
+            got = _sorted(SJ.pip_join(sdf, src), ["poly_id", "image_id"])
+            pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    finally:
+        sdf.unpersist()
 
 
 def test_pip_join_exact(spark, calc, images_pdf):
@@ -247,8 +315,8 @@ def test_pip_join_exact(spark, calc, images_pdf):
 
 
 def test_pip_join_dataframe_matches_pandas_input(spark, calc, images_pdf):
-    # broadcast-dict vertices (pandas) and vertex-join vertices
-    # (DataFrame) both return the brute-force pairs
+    # pandas and DataFrame polygons run the same edge-band plan and
+    # both return the brute-force pairs
     polys = FX.make_polygons_pdf(80)
     exp = _pip_brute(images_pdf, polys)
     assert len(exp) > 0
@@ -260,8 +328,8 @@ def test_pip_join_dataframe_matches_pandas_input(spark, calc, images_pdf):
 
 
 def test_pip_join_batch_large_polygon_set(spark, calc, images_pdf):
-    # 6*10^3 polygons as a DataFrame (distributed cover + verts-join
-    # refine, no driver vertex broadcast) equal the ray-crossing oracle
+    # 6*10^3 polygons as a DataFrame (distributed cover + edge-band
+    # refine, nothing on the driver) equal the ray-crossing oracle
     polys = FX.make_polygons_pdf(6_000, seed=31)
     got = _sorted(SJ.pip_join(calc, spark.createDataFrame(polys)),
                   ["poly_id", "image_id"])
