@@ -5,8 +5,8 @@ Exact (hash groupBy), n-gram Jaccard (inverted shingle index), MinHash+LSH
 lean DataFrame plans:
 
 - shingling is explode + window(lead), no Python;
-- minhash signatures are ONE groupBy(doc).agg(min per hash) over the
-  exploded shingle stream (map-side combinable);
+- minhash minima are one Arrow pass per doc (md5 word hashes -> min per
+  hash), so nothing is shuffled before the band join;
 - LSH candidate generation is an equi-join on (band, bucket) — never a
   cross join;
 - verification joins candidates back to signatures/shingle sets.
@@ -36,15 +36,18 @@ WORD_HASH = "cast(conv(substring(md5({col}),1,15),16,10) as bigint)"
 # Spark and DuckDB: a*h + b < 2^62.
 MERSENNE_P = (1 << 31) - 1
 
-# Crossover for the Arrow band-key kernel vs the exploded-SQL form
-# (minhash_lsh_pairs arrow=None).  Measured on local[32], identical
-# outputs at every point: 5k docs/0.6MB legacy 1.4s vs arrow 3.3s;
-# 100k docs/17MB legacy 13.0s vs arrow 15.1s; 1M docs/169MB legacy
-# 29.2s vs arrow 23.8s; 10M docs legacy 367s vs arrow 265s.  Below the
-# crossover the per-shingle Python md5 dominates and the shuffle the
-# kernel removes is trivial; above it the 13GB-at-10M-docs signature
-# shuffle dominates.  64MB splits the measured points with margin.
-ARROW_MIN_BYTES = 64 << 20
+# Input size (Catalyst estimate) at which minhash_lsh_pairs switches from
+# the small plan shape (fan the input out, no caches, no candidate-id
+# restriction) to the big one (cached band stream, persisted candidates,
+# restricted set build); _spread_small fans out below the same size.
+# Measured on 4 vCPUs, identical outputs in every cell (README perf rule
+# 13): 0.6 MB (sf0.1) small 1.15s vs big 1.64s; 34 MB (200k docs in 4
+# files) small 9.17s vs big 5.66s; 169 MB (1M docs) small 44.29s vs big
+# 24.32s.  The crossover lies between 0.6 and 34 MB; 64 MiB is the value
+# tuned on local[32] and picks the small shape at 34 MB, so it is due a
+# re-tune — which must also see the partition count: on the same 34 MB
+# as ONE file the big shape scans one partition and takes 11.63s.
+BIG_PLAN_MIN_BYTES = 64 << 20
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
@@ -68,12 +71,12 @@ def _spread_small(df: DataFrame) -> DataFrame:
     sub-128MB file), so the whole projection runs on a single core
     (measured 2.9s for 270k grams on local[32]; 0.4s after the spread).
     Only fires when the input is small enough for the round-robin
-    shuffle to be noise (sub-ARROW_MIN_BYTES — at worst a pointless
+    shuffle to be noise (sub-BIG_PLAN_MIN_BYTES — at worst a pointless
     <64MB shuffle when the input is already well-partitioned); a corpus
     at scale is untouched."""
     sc = df.sparkSession.sparkContext
     p = sc.defaultParallelism
-    if (_plan_size_bytes(df) or ARROW_MIN_BYTES) < ARROW_MIN_BYTES:
+    if (_plan_size_bytes(df) or BIG_PLAN_MIN_BYTES) < BIG_PLAN_MIN_BYTES:
         return df.repartition(p)
     return df
 
@@ -222,45 +225,22 @@ def _hash_params(num_hashes: int) -> list[tuple[int, int]]:
             for i in range(num_hashes)]
 
 
-def minhash_signatures(df: DataFrame, num_hashes: int = 16,
-                       text: str = "text", id_col: str = "doc_id",
-                       n: int = 2, _shingles: DataFrame | None = None
-                       ) -> DataFrame:
-    """MinHash signature per doc: min over shingles of (a*h + b) mod P for
-    each hash i — a single groupBy over the exploded shingle stream.
-    Pass ``_shingles`` to reuse an already-materialized shingle stream
-    (minhash_lsh_pairs shares one cached pass between the signature and
-    verification stages — at corpus scale the shingle scan is the most
-    expensive input and must not run twice).
-    Output: (id, mh0..mh{k-1})."""
-    sh = (_shingles if _shingles is not None
-          else shingles(df, text, id_col, n)).withColumn(
-        "h", F.expr(WORD_HASH.format(col="shingle"))
-        % F.lit(2147483647))  # 31-bit reduce: a*h must stay inside int64
-    aggs = [
-        F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P))
-        .alias(f"mh{i}")
-        for i, (a, b) in enumerate(_hash_params(num_hashes))
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
-
-
-def _minhash_minima_arrow(df: DataFrame, num_hashes: int,
-                          text: str, id_col: str, n: int) -> DataFrame:
+def _minhash_minima(df: DataFrame, num_hashes: int,
+                    text: str, id_col: str, n: int) -> DataFrame:
     """One Arrow pass per doc: text -> distinct n-gram shingles -> md5
     word hashes -> ``num_hashes`` universal-hash minima.  Bit-identical
-    to the exploded-stream groupBy formulation (same md5-hex-15 word
-    hash — computed as ``digest()[:8] >> 4``, the integer equal of
+    to the exploded-stream groupBy the SQL oracle replays (same md5-hex-15
+    word hash — computed as ``digest()[:8] >> 4``, the integer equal of
     ``int(hexdigest()[:15], 16)`` without the hex round trip — same
     (h*a+b) mod M minima), but with ZERO shuffle before the candidate
-    join: the legacy groupBy over the exploded shingle stream wrote a
-    13 GB signature shuffle with 11.6 GB of hash-agg spill at 10M docs.
+    join: a groupBy over the exploded shingle stream wrote a 13 GB
+    signature shuffle with 11.6 GB of hash-agg spill at 10M docs.
     Band-key hashing is NOT done here: md5 over the N x bands key
     strings is whole-stage-codegen work (:func:`_band_key_cols` applies
-    the exact legacy SQL expressions to ``mins``), and keeping it
-    JVM-side removed a 160M-iteration Python string+md5 loop measured
-    at ~1/3 of this kernel's wall at 10M docs.  Docs with no shingles
-    emit no row (they have no signature, matching the groupBy form).
+    it to ``mins``), and keeping it JVM-side removed a 160M-iteration
+    Python string+md5 loop measured at ~1/3 of this kernel's wall at 10M
+    docs.  Docs with no shingles (null text included) emit no row: they
+    have no signature.
     Output: (id_col, mins array<long>[num_hashes])."""
     import hashlib
 
@@ -285,7 +265,7 @@ def _minhash_minima_arrow(df: DataFrame, num_hashes: int,
             ids_all, hs_all, offs = [], [], [0]
             for i, t in zip(pdf[id_col], pdf[text]):
                 if t is None:
-                    continue  # legacy form: null text -> empty gram set
+                    continue  # null text -> empty gram set
                 wsl = t.split(" ")
                 if len(wsl) < n:
                     continue
@@ -317,16 +297,12 @@ def _minhash_minima_arrow(df: DataFrame, num_hashes: int,
     return df.mapInPandas(keys_fn, schema)
 
 
-def _band_key_cols(mh_col, bands: int, rows: int) -> list:
-    """The ``bands`` band-key Columns over per-doc minhash values:
-    60-bit md5 of '{band}_{mh}_{mh}...' — ONE expression shared by the
-    legacy exploded-stream plan (``mh_col(i)`` = the agg column ``mh{i}``)
-    and the Arrow-kernel plan (``mh_col(i)`` = ``mins[i]``), so the two
-    branches are bit-identical by construction and the md5 runs in
-    whole-stage codegen either way."""
+def _band_key_cols(bands: int, rows: int) -> list:
+    """The ``bands`` band-key Columns over the per-doc ``mins`` array:
+    60-bit md5 of '{band}_{mh}_{mh}...', run in whole-stage codegen."""
     out = []
     for b in range(bands):
-        cols = [mh_col(b * rows + r) for r in range(rows)]
+        cols = [F.col("mins")[b * rows + r] for r in range(rows)]
         concat = F.concat_ws("_", F.lit(str(b)),
                              *[c.cast("string") for c in cols])
         out.append(F.conv(F.substring(F.md5(concat), 1, 15), 16, 10)
@@ -338,10 +314,9 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
                       text: str = "text", id_col: str = "doc_id",
                       n: int = 2, verify_threshold: float | None = 0.4,
                       max_bucket: int | None = None,
-                      arrow: bool | None = None,
                       cleanup: bool = False) -> DataFrame:
     """LSH candidate pairs: docs sharing any band bucket.  Buckets are the
-    concatenated band slice of the signature (portable string key).  With
+    md5 of the band's concatenated signature slice.  With
     verify_threshold set, candidates are verified with true Jaccard via the
     shingle index (cover-and-refine, like the spatial joins).
     Output: (id_a, id_b[, inter, union_sz]).
@@ -353,15 +328,14 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
     band keys holding more than the cap are dropped before the self-join,
     bounding candidates at O(N x cap x bands).
 
-    ``arrow=True`` computes the per-doc minhash minima in one Arrow
-    kernel (:func:`_minhash_minima_arrow`) — bit-identical values, zero
-    shuffle before the candidate join; ``arrow=False`` keeps the
-    exploded-stream groupBy formulation the SQL oracle replays verbatim
-    (same output either way; both feed the shared :func:`_band_key_cols`
-    codegen band-key expressions).  The default (``None``) picks by input
-    size: legacy below ``ARROW_MIN_BYTES`` (the kernel's Python md5 cost
-    dominates small inputs), Arrow above it (the shuffle it removes
-    dominates large ones) — measurements at the constant's definition.
+    The per-doc minhash minima come from one Arrow kernel
+    (:func:`_minhash_minima`, zero shuffle before the candidate join);
+    the band keys are codegen md5 expressions over them
+    (:func:`_band_key_cols`).  The plan shape picks by input size:
+    below ``BIG_PLAN_MIN_BYTES`` the input is fanned out and nothing is
+    cached or restricted; at or above it (or when Catalyst has no
+    estimate) the big shape below runs — measurements at the
+    constant's definition.
 
     Cache ownership: on the big path the band stream is ``.cache()``d
     (both self-join sides read it) and the candidate table is persisted
@@ -375,17 +349,9 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
     :func:`_materialize_release` for the cluster-resume caveat."""
     rows = num_hashes // bands
     # scale-safe when the estimate is unknown: treat as big
-    big = (_plan_size_bytes(df) or ARROW_MIN_BYTES) >= ARROW_MIN_BYTES
+    big = (_plan_size_bytes(df) or BIG_PLAN_MIN_BYTES) >= BIG_PLAN_MIN_BYTES
     if not big:
         df = _spread_small(df)  # single-file inputs: use every core
-    if arrow is None:
-        # size-adaptive: the Arrow kernel pays per-shingle Python md5 to
-        # remove the signature shuffle — a win only once the input is big
-        # enough for that shuffle to matter (measured crossover at
-        # ARROW_MIN_BYTES; scale-safe default when stats are unknown,
-        # since an unknown estimate means Catalyst saw no file relation
-        # and reports Long.Max anyway)
-        arrow = big
     # Band keys are the 60-bit md5 hash of the band's concatenated slice,
     # not the concat string itself: with production banding (10+ rows per
     # band x 19-digit hashes) the string key is ~200B, and the banded
@@ -394,31 +360,18 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
     # slices hash equal, so candidate semantics are unchanged (a 2^-60
     # collision could only add a candidate, which exact verification then
     # filters by the same rule the oracle replays).
-    if arrow:
-        keyed = _minhash_minima_arrow(df, num_hashes, text, id_col, n)
-        bucket_cols = _band_key_cols(lambda i: F.col("mins")[i],
-                                     bands, rows)
-    else:
-        # no cache: the signature agg is the stream's only consumer now
-        # that the verify sets are a direct per-doc projection below
-        keyed = minhash_signatures(df, num_hashes, text, id_col, n)
-        bucket_cols = _band_key_cols(lambda i: F.col(f"mh{i}"),
-                                     bands, rows)
+    keyed = _minhash_minima(df, num_hashes, text, id_col, n)
     # all band keys in ONE pass: explode of an array projection instead
     # of a bands-way union (which scanned the signature table per band)
     stacked = keyed.select(
-        F.col(id_col), F.explode(F.array(*bucket_cols)).alias("bucket"))
+        F.col(id_col),
+        F.explode(F.array(*_band_key_cols(bands, rows))).alias("bucket"))
     held: list[DataFrame] = []  # internal caches for cleanup=True
     if big:
         # both self-join sides + the candidate-id restriction read this
         # one pass; below the threshold recomputation is cheaper than the
         # cache-materialization barrier (one fewer sequential job)
-        import os as _os
-        if _os.environ.get("OSMQT_BAND_STREAM_DISK") == "1":
-            from pyspark import StorageLevel
-            stacked = stacked.persist(StorageLevel.DISK_ONLY)
-        else:
-            stacked = stacked.cache()
+        stacked = stacked.cache()
         held.append(stacked)
     if max_bucket is not None:
         stacked = drop_hot_keys(stacked, "bucket", max_bucket)

@@ -104,62 +104,6 @@ def cosine_topk_exact(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     )
 
 
-def cosine_near_dup_pairs(embeddings: DataFrame, threshold_num: int = 3,
-                          threshold_den: int = 10, id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: (id_a < id_b) with
-    cos(a, b) >= threshold_num / threshold_den.
-
-    Exact and engine-portable: vectors are QUANT-quantized to ints and the
-    threshold test is pure integer arithmetic —
-        dot > 0  AND  dot^2 * den^2 >= num^2 * |a|^2 * |b|^2
-    so no float-sum ordering can flip a boundary pair (the dedup analogue of
-    l2_topk's integer scoring).
-    Overflow bound: |q_i| <= QUANT, dim <= 64 -> dot^2 * den^2 < 2^63 for
-    den <= 10.  Output: (id_a, id_b, dot).
-
-    TEST-ORACLE TWIN ONLY: this form collects the full embedding side to
-    the driver and broadcasts it (one int64 matmul per Arrow batch —
-    measured 30s -> ~2s on 2000x64 vs the crossJoin+fold).  It exists to
-    pin exactness in unit tests against the distributed forms; production
-    paths are :func:`cosine_near_dup_pairs_blocked` (exact, no driver
-    materialization, bounded task memory) and
-    :func:`cosine_near_dup_pairs_lsh` (bucketed candidates, the 10^12
-    path)."""
-    from typing import Iterator
-
-    spark = embeddings.sparkSession
-    side = embeddings.select(F.col(id_col).alias("id"),
-                             _quantized(F.col(vec_col)).alias("v")).toPandas()
-    ids_all = side["id"].to_numpy(np.int64)
-    m = np.stack(side["v"].to_numpy()).astype(np.int64)
-    norms_all = (m * m).sum(axis=1)
-    bc = spark.sparkContext.broadcast((ids_all, m, norms_all))
-    num2 = threshold_num * threshold_num
-    den2 = threshold_den * threshold_den
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_b, mat, norms = bc.value
-        for b in batches:
-            if not len(b):
-                continue
-            a = np.stack(b["v"].to_numpy()).astype(np.int64)
-            ida = b["id"].to_numpy(np.int64)
-            dots = a @ mat.T
-            na = (a * a).sum(axis=1)
-            keep = ((ida[:, None] < ids_b[None, :]) & (dots > 0)
-                    & (dots * dots * den2
-                       >= num2 * na[:, None] * norms[None, :]))
-            r, c = np.nonzero(keep)
-            yield pd.DataFrame({"id_a": ida[r], "id_b": ids_b[c],
-                                "dot": dots[r, c]})
-
-    return embeddings.select(
-        F.col(id_col).alias("id"),
-        _quantized(F.col(vec_col)).alias("v")).mapInPandas(
-        fn, schema="id_a long, id_b long, dot long")
-
-
 def cosine_near_dup_pairs_blocked(embeddings: DataFrame,
                                   threshold_num: int = 3,
                                   threshold_den: int = 10,
@@ -169,9 +113,11 @@ def cosine_near_dup_pairs_blocked(embeddings: DataFrame,
     """Exact cosine near-dup pairs with NO driver materialization: the
     triangular block self-join.
 
-    Same pair set and integer predicate as :func:`cosine_near_dup_pairs`
-    (dot > 0 AND dot^2*den^2 >= num^2*|a|^2*|b|^2 on QUANT-quantized ints),
-    but distributed: each vector is hashed to one of B blocks and replicated
+    Pairs (id_a < id_b) with cos(a, b) >= threshold_num / threshold_den,
+    tested exactly as dot > 0 AND dot^2*den^2 >= num^2*|a|^2*|b|^2 on
+    QUANT-quantized ints (no float-sum ordering can flip a boundary pair;
+    |q_i| <= QUANT, dim <= 64 keeps dot^2 * den^2 < 2^63 for den <= 10).
+    Distributed: each vector is hashed to one of B blocks and replicated
     to the B block-pair groups it participates in (diagonal group once), so
     the B*(B+1)/2 groups tile the pair triangle exactly once.  Each group
     runs ONE int64 matmul over its two sub-blocks inside applyInPandas —
@@ -230,36 +176,19 @@ def cosine_near_dup_pairs_blocked(embeddings: DataFrame,
 
 def with_lsh_band_keys(df: DataFrame, dim: int, planes_per_band: int = 3,
                        bands: int = 12, vec_col: str = "embedding",
-                       out: str = "bkeys", arrow: bool | None = None
-                       ) -> DataFrame:
+                       out: str = "bkeys") -> DataFrame:
     """Banded hyperplane LSH keys: ``bands`` independent tables, each keyed
     by ``planes_per_band`` sign bits (plane j = band*ppb + r reuses the
     deterministic integer coefficients of :func:`with_lsh_bucket`).  Key =
     band * 2^ppb + bits, so keys from different bands never collide.
 
-    Default is the Arrow sign-matmul form: bands x ppb interpreted HOF
-    fold dots per row (HOFs never enter whole-stage codegen) become one
-    int64 ``Q @ P.T`` + sign-pack per Arrow batch — the same bit-exact
-    rewrite as the IVF assignment (perf log rules 8/12).  ``arrow=False``
-    restores the pure-Column projection, replayable verbatim in SQL; the
-    oracle matches either form because the integer math is identical."""
-    if arrow is None:
-        arrow = True
-    if arrow:
-        return _with_signs_arrow(df, dim, vec_col, out,
-                                 planes=bands * planes_per_band,
-                                 ppb=planes_per_band, bands=bands)
-    df = df.withColumn("__vq", _quantized_checked(F.col(vec_col), dim))
-    keys = []
-    for b in range(bands):
-        bits = F.lit(b * (1 << planes_per_band))
-        for r in range(planes_per_band):
-            j = b * planes_per_band + r
-            coeffs = F.array(*[F.lit(_plane_coeff(j, d)) for d in range(dim)])
-            dot = _dot_int(F.col("__vq"), coeffs)
-            bits = bits + F.when(dot > 0, F.lit(1 << r)).otherwise(F.lit(0))
-        keys.append(bits)
-    return df.withColumn(out, F.array(*keys)).drop("__vq")
+    One int64 ``Q @ P.T`` + sign-pack per Arrow batch in place of bands x
+    ppb interpreted HOF fold dots per row (HOFs never enter whole-stage
+    codegen) — the same bit-exact rewrite as the IVF assignment (perf log
+    rules 8/12); the SQL oracle replays the identical integer math."""
+    return _with_signs_arrow(df, dim, vec_col, out,
+                             planes=bands * planes_per_band,
+                             ppb=planes_per_band, bands=bands)
 
 
 def _with_signs_arrow(df: DataFrame, dim: int, vec_col: str, out: str,
@@ -398,31 +327,27 @@ def centroids(cells: int, dim: int) -> list[list[int]]:
 
 def with_ivf_cell(df: DataFrame, dim: int, cells: int = 8,
                   vec_col: str = "embedding", out: str = "cell",
-                  _keep_dists: bool = False, arrow: bool | None = None
-                  ) -> DataFrame:
+                  _keep_dists: bool = False) -> DataFrame:
     """IVF coarse quantizer: assign each vector to its nearest centroid
     (integer squared-L2, ties -> lowest cell id).
 
-    Two byte-identical forms (checksum-verified equal at 1M vectors):
+    What the caller needs picks the form; both give the same cell:
 
-    - **Arrow matmul (default for the data side)**: one int64
-      ``Q @ C.T`` per Arrow batch against the broadcast centroid matrix.
-      The Column form evaluates ``cells`` interpreted HOF folds per row
-      (higher-order functions are excluded from whole-stage codegen, perf
-      log rule 8) — measured 43.6s vs 7.0s at 1M x 64 x 64.  Same scan,
-      no shuffle; argmin's first-minimum rule matches array_position's
-      tie-break (lowest cell id); quantization replays floor(double *
-      QUANT) bit-exactly in float64.
-    - **Column literals (``arrow=False``, and always for the query side
-      where per-cell distances are needed)**: pure projection, no Python
-      worker — right when the scan is already Python-free and ``cells``
-      is small.
+    - **data side**: one int64 ``Q @ C.T`` per Arrow batch against the
+      centroid matrix (:func:`_with_ivf_cell_arrow`).  The Column form
+      evaluates ``cells`` interpreted HOF folds per row (higher-order
+      functions are excluded from whole-stage codegen, perf log rule 8);
+      on 4 vCPUs the two tie at 2,000 vectors and the matmul is 4.6x
+      faster at 10^6 x 64 (README perf rule 13).  argmin's first-minimum
+      rule matches array_position's tie-break (lowest cell id);
+      quantization replays floor(double * QUANT) bit-exactly in float64.
+    - **query side** (``_keep_dists``, the per-cell distances the probe
+      order needs, kept as ``__ds``): pure Column projection, no Python
+      worker.
 
     Writing/partitioning by ``cell`` afterwards gives the inverted-file
     layout that makes probes a pruned equi-join at 10^12 rows."""
-    if arrow is None:
-        arrow = not _keep_dists
-    if arrow and not _keep_dists:
+    if not _keep_dists:
         return _with_ivf_cell_arrow(df, dim, cells, vec_col, out)
     df = df.withColumn("__vq", _quantized_checked(F.col(vec_col), dim))
     dists = []
@@ -432,12 +357,9 @@ def with_ivf_cell(df: DataFrame, dim: int, cells: int = 8,
             F.aggregate(F.zip_with(F.col("__vq"), lit,
                                    lambda x, y: (x - y) * (x - y)),
                         F.lit(0).cast("long"), lambda acc, v: acc + v))
-    darr = F.array(*dists)
-    df = df.withColumn("__ds", darr).withColumn(
+    df = df.withColumn("__ds", F.array(*dists)).withColumn(
         out, (F.array_position(F.col("__ds"), F.array_min(F.col("__ds")))
               - 1).cast("int"))
-    if not _keep_dists:
-        df = df.drop("__ds")
     return df.drop("__vq")
 
 
@@ -616,18 +538,14 @@ def _plane_coeff(j: int, d: int) -> int:
 def with_lsh_bucket(df: DataFrame, dim: int, planes: int = 8,
                     vec_col: str = "embedding",
                     out: str = "bucket",
-                    _keep_dots: bool = False,
-                    arrow: bool | None = None) -> DataFrame:
+                    _keep_dots: bool = False) -> DataFrame:
     """Random-hyperplane LSH bucket: bit j = sign of <v_int, plane_j>.
-    Integer dot products -> exact, portable bucket ids.  With
-    ``_keep_dots`` the per-plane dots stay as array column ``__pd``
-    (multi-probe uses |dot| as the flip margin; that query-side form
-    stays pure-Column).  Data side defaults to the Arrow sign-matmul
-    (bit-identical; see :func:`_with_signs_arrow`); ``arrow=False``
-    restores the Column projection."""
-    if arrow is None:
-        arrow = not _keep_dots
-    if arrow and not _keep_dots:
+    Integer dot products -> exact, portable bucket ids.  The data side is
+    the Arrow sign-matmul (:func:`_with_signs_arrow`); with ``_keep_dots``
+    (the query side of multi-probe, which uses |dot| as the flip margin)
+    it is a pure Column projection that also keeps the per-plane dots as
+    array column ``__pd``.  Both forms give the same bucket."""
+    if not _keep_dots:
         return _with_signs_arrow(df, dim, vec_col, out, planes=planes)
     df = df.withColumn("__vq", _quantized_checked(F.col(vec_col), dim))
     dots = []
@@ -637,10 +555,7 @@ def with_lsh_bucket(df: DataFrame, dim: int, planes: int = 8,
         dot = _dot_int(F.col("__vq"), coeffs)
         dots.append(dot)
         bucket = bucket + F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0))
-    df = df.withColumn(out, bucket)
-    if _keep_dots:
-        df = df.withColumn("__pd", F.array(*dots))
-    return df.drop("__vq")
+    return df.withColumns({out: bucket, "__pd": F.array(*dots)}).drop("__vq")
 
 
 def ann_lsh_multiprobe_topk(embeddings: DataFrame, queries: DataFrame,
@@ -656,8 +571,8 @@ def ann_lsh_multiprobe_topk(embeddings: DataFrame, queries: DataFrame,
 
     Pure Column algebra: the probe list is sort_array over encoded margins,
     the flip is an XOR with 2^j (exact double -> long for j < 53); the
-    candidate set stays a broadcast equi-join on bucket.  nprobe=1 reduces
-    exactly to ann_lsh_topk.  Output: (qid, rank, vec_id, dist2)."""
+    candidate set stays a broadcast equi-join on bucket.  nprobe=1 probes
+    the query's own bucket only.  Output: (qid, rank, vec_id, dist2)."""
     e = with_lsh_bucket(embeddings, dim, planes, vec_col).select(
         F.col(id_col), _quantized(F.col(vec_col)).alias("__v"), "bucket")
     q = with_lsh_bucket(
@@ -673,37 +588,6 @@ def ann_lsh_multiprobe_topk(embeddings: DataFrame, queries: DataFrame,
     probes = F.array_union(F.array(F.col("bucket")), flips)
     q = q.select(F.col(qid_col), _quantized(F.col("__qv")).alias("__q"),
                  F.explode(probes).alias("bucket"))
-    cand = e.join(F.broadcast(q), "bucket").withColumn(
-        "dist2",
-        F.aggregate(F.zip_with(F.col("__v"), F.col("__q"),
-                               lambda x, y: (x - y) * (x - y)),
-                    F.lit(0).cast("long"), lambda acc, v: acc + v),
-    )
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("dist2").asc(), F.col(id_col).asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", id_col, "dist2")
-    )
-
-
-def ann_lsh_topk(embeddings: DataFrame, queries: DataFrame, dim: int,
-                 k: int = 10, planes: int = 8, id_col: str = "vec_id",
-                 vec_col: str = "embedding", qid_col: str = "qid",
-                 qvec_col: str = "qvec") -> DataFrame:
-    """Approximate top-k: probe only vectors in the query's LSH bucket,
-    exact integer-L2 re-rank inside the bucket.  The equi-join on bucket is
-    the 10^12-scale path (bucketed/partitioned storage co-locates it).
-    Output: (qid, rank, vec_id, dist2) — may return < k rows per query
-    (approximate by design; multi-probe = union neighboring buckets)."""
-    e = with_lsh_bucket(embeddings, dim, planes, vec_col)
-    q = with_lsh_bucket(
-        queries.withColumnRenamed(qvec_col, "__qv"), dim, planes, "__qv")
-    e = e.select(F.col(id_col), _quantized(F.col(vec_col)).alias("__v"),
-                 "bucket")
-    q = q.select(F.col(qid_col), _quantized(F.col("__qv")).alias("__q"),
-                 "bucket")
     cand = e.join(F.broadcast(q), "bucket").withColumn(
         "dist2",
         F.aggregate(F.zip_with(F.col("__v"), F.col("__q"),

@@ -95,37 +95,39 @@ def test_simhash_multi_index_equals_classic(spark):
     assert classic == multi and len(classic) > 0
 
 
-def test_minhash_arrow_equals_legacy(spark):
-    # the Arrow band-key kernel must be BIT-identical to the
-    # exploded-stream groupBy form the SQL oracle replays: same md5
-    # word hashes, same (h*a+b) mod M minima, same hashed band keys —
-    # so both verified-pair outputs (inter/union included) match exactly
+def test_minhash_null_text_row_adds_no_pairs(spark):
+    # a null-text doc has an empty gram set, hence no minhash signature
+    # and no band keys: adding one must leave every verified pair
+    # (inter/union included) exactly as the docs alone give them
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    # a null-text doc must be dropped identically by both forms (the
-    # legacy gram set is empty for NULL; the kernel skips the row)
     null_row = spark.range(1).select(
         F.lit(999999).cast("long").alias("doc_id"),
         *[F.lit(None).cast(docs.schema[c].dataType).alias(c)
           for c in docs.columns if c != "doc_id"])
-    docs = docs.unionByName(null_row.select(*docs.columns))
+    with_null = docs.unionByName(null_row.select(*docs.columns))
     kw = dict(num_hashes=8, bands=4, verify_threshold=0.2)
-    a = sorted(map(tuple, DD.minhash_lsh_pairs(docs, arrow=True,
-                                               **kw).collect()))
-    b = sorted(map(tuple, DD.minhash_lsh_pairs(docs, arrow=False,
-                                               **kw).collect()))
+    a = sorted(map(tuple, DD.minhash_lsh_pairs(docs, **kw).collect()))
+    b = sorted(map(tuple, DD.minhash_lsh_pairs(with_null, **kw).collect()))
     assert a == b and len(a) > 0
 
 
-def test_minhash_default_is_size_adaptive(spark):
-    # arrow=None resolves by Catalyst's size estimate: the sf0.01 table
-    # is far below ARROW_MIN_BYTES so the default must pick the legacy
-    # exploded-stream plan (no mapInPandas / ArrowEvalPython node), while
-    # a stats-free in-memory frame must pick the scale-safe Arrow branch
+def test_minhash_big_shape_equals_small_shape(spark, monkeypatch):
+    # the sf0.01 table is far below BIG_PLAN_MIN_BYTES, so the default
+    # runs the small plan shape (fanned-out input, no caches, unrestricted
+    # set build); a 0 threshold forces the big one (cached band stream,
+    # persisted candidates, candidate-id restricted sets).  Plan shape
+    # must never change the pairs, with or without verification.
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    small = DD.minhash_lsh_pairs(docs, num_hashes=8, bands=4,
-                                 verify_threshold=None)
-    assert "mapInPandas" not in small._jdf.queryExecution().analyzed().toString()
-    assert (DD._plan_size_bytes(docs) or 0) < DD.ARROW_MIN_BYTES
+    assert (DD._plan_size_bytes(docs) or 0) < DD.BIG_PLAN_MIN_BYTES
+    for kw in (dict(num_hashes=8, bands=4, verify_threshold=0.2),
+               dict(num_hashes=8, bands=4, verify_threshold=None)):
+        small = sorted(map(tuple, DD.minhash_lsh_pairs(docs, **kw)
+                           .collect()))
+        monkeypatch.setattr(DD, "BIG_PLAN_MIN_BYTES", 0)
+        big = sorted(map(tuple, DD.minhash_lsh_pairs(docs, **kw).collect()))
+        monkeypatch.undo()
+        spark.catalog.clearCache()
+        assert big == small and len(small) > 0
 
 
 def _sql_cache_empty(spark) -> bool:
@@ -142,7 +144,7 @@ def test_cleanup_releases_caches(spark, monkeypatch):
     spark.catalog.clearCache()
 
     # minhash big path (both caches engage): force via the size gate
-    monkeypatch.setattr(DD, "ARROW_MIN_BYTES", 0)
+    monkeypatch.setattr(DD, "BIG_PLAN_MIN_BYTES", 0)
     kw = dict(num_hashes=8, bands=4, verify_threshold=0.2)
     base = sorted(map(tuple, DD.minhash_lsh_pairs(docs, **kw).collect()))
     assert not _sql_cache_empty(spark)  # default path: caches linger
@@ -157,7 +159,7 @@ def test_cleanup_releases_caches(spark, monkeypatch):
     DD.minhash_lsh_pairs(docs, num_hashes=8, bands=4,
                          verify_threshold=None, cleanup=True).collect()
     assert _sql_cache_empty(spark)
-    monkeypatch.setattr(DD, "ARROW_MIN_BYTES", 64 * 1024 * 1024)
+    monkeypatch.setattr(DD, "BIG_PLAN_MIN_BYTES", 64 * 1024 * 1024)
 
     # ngram (shingle-stream cache is unconditional)
     base = sorted(map(tuple, DD.ngram_jaccard_pairs(

@@ -13,7 +13,6 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 DRIVER_SIDE_ALLOWED = {
     "plans/pipeline.py": 1,      # tile-group plan (O(groups))
     "operators/spatial_join.py": 1,  # kNN cell histogram (O(4^COVER_DEPTH))
-    "operators/similarity.py": 1,    # near-dup broadcast matrix (bounded side)
     "operators/tiling.py": 2,    # depth-choice agg row + cell histogram
     "driver_queries.py": 1,      # s2_header bbox agg (one metadata row)
 }
@@ -62,3 +61,18 @@ def test_spatial_join_python_boundaries():
     src = dict(_sources())["operators/spatial_join.py"]
     assert len(re.findall(r"\.mapInPandas\(", src)) == 1
     assert "sparkContext.broadcast" not in src
+
+
+def test_operators_read_no_env_and_pin_python_boundaries():
+    # operator behaviour is set by arguments alone, never by an env
+    # variable; dedup keeps one Arrow kernel (the minhash minima) and
+    # similarity three (LSH signs, IVF cells, the blocked near-dup
+    # matmul)
+    srcs = dict(_sources())
+    for rel, src in srcs.items():
+        if rel.startswith("operators/"):
+            assert "os.environ" not in src and "getenv" not in src, (
+                f"{rel} reads the environment")
+    pat = re.compile(r"\.(mapInPandas|applyInPandas)\(")
+    assert len(pat.findall(srcs["operators/dedup.py"])) == 1
+    assert len(pat.findall(srcs["operators/similarity.py"])) == 3

@@ -5,10 +5,14 @@ cover-and-refine joins (SURVEY.md §2.3 J9-J12) applied to embedding space;
 no direct reference op (training-pipeline extension).
 """
 
+from typing import Iterator
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from osmquadtree_rust_bindings_spark.operators import similarity as SIM
 
@@ -25,6 +29,72 @@ def emb(spark):
 def queries(emb):
     return emb.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
+
+
+def cosine_near_dup_pairs(embeddings: DataFrame, threshold_num: int = 3,
+                          threshold_den: int = 10, id_col: str = "vec_id",
+                          vec_col: str = "embedding") -> DataFrame:
+    """Exact oracle for the near-dup operators: (id_a < id_b) with
+    cos(a, b) >= threshold_num / threshold_den, by the same integer test
+    (dot > 0 AND dot^2 * den^2 >= num^2 * |a|^2 * |b|^2 on QUANT-quantized
+    ints).  Collects the whole embedding side to the driver, broadcasts
+    it and runs one int64 matmul per Arrow batch — fine at test scale,
+    never a production path.  Output: (id_a, id_b, dot)."""
+    spark = embeddings.sparkSession
+    side = embeddings.select(
+        F.col(id_col).alias("id"),
+        SIM._quantized(F.col(vec_col)).alias("v")).toPandas()
+    ids_all = side["id"].to_numpy(np.int64)
+    m = np.stack(side["v"].to_numpy()).astype(np.int64)
+    norms_all = (m * m).sum(axis=1)
+    bc = spark.sparkContext.broadcast((ids_all, m, norms_all))
+    num2 = threshold_num * threshold_num
+    den2 = threshold_den * threshold_den
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids_b, mat, norms = bc.value
+        for b in batches:
+            if not len(b):
+                continue
+            a = np.stack(b["v"].to_numpy()).astype(np.int64)
+            ida = b["id"].to_numpy(np.int64)
+            dots = a @ mat.T
+            na = (a * a).sum(axis=1)
+            keep = ((ida[:, None] < ids_b[None, :]) & (dots > 0)
+                    & (dots * dots * den2
+                       >= num2 * na[:, None] * norms[None, :]))
+            r, c = np.nonzero(keep)
+            yield pd.DataFrame({"id_a": ida[r], "id_b": ids_b[c],
+                                "dot": dots[r, c]})
+
+    return embeddings.select(
+        F.col(id_col).alias("id"),
+        SIM._quantized(F.col(vec_col)).alias("v")).mapInPandas(
+        fn, schema="id_a long, id_b long, dot long")
+
+
+def ann_lsh_topk(embeddings: DataFrame, queries: DataFrame, dim: int,
+                 k: int = 10, planes: int = 8) -> DataFrame:
+    """Single-bucket LSH top-k oracle: both sides bucketed by the data-side
+    form of with_lsh_bucket, exact integer-L2 re-rank inside the query's
+    own bucket.  Output: (qid, rank, vec_id, dist2)."""
+    e = SIM.with_lsh_bucket(embeddings, dim, planes).select(
+        "vec_id", SIM._quantized(F.col("embedding")).alias("__v"), "bucket")
+    q = SIM.with_lsh_bucket(queries, dim, planes, "qvec").select(
+        "qid", SIM._quantized(F.col("qvec")).alias("__q"), "bucket")
+    cand = e.join(F.broadcast(q), "bucket").withColumn(
+        "dist2",
+        F.aggregate(F.zip_with(F.col("__v"), F.col("__q"),
+                               lambda x, y: (x - y) * (x - y)),
+                    F.lit(0).cast("long"), lambda acc, v: acc + v),
+    )
+    w = Window.partitionBy("qid").orderBy(
+        F.col("dist2").asc(), F.col("vec_id").asc())
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "rank", "vec_id", "dist2")
+    )
 
 
 def _norm(pdf):
@@ -70,15 +140,33 @@ def test_partial_probe_is_subset_with_high_recall(emb, queries):
 
 
 def test_multiprobe_nprobe1_equals_single_bucket(emb, queries):
-    single = _norm(SIM.ann_lsh_topk(emb, queries, DIM, k=10,
-                                    planes=8).toPandas())
+    single = _norm(ann_lsh_topk(emb, queries, DIM, k=10,
+                                planes=8).toPandas())
     multi = _norm(SIM.ann_lsh_multiprobe_topk(emb, queries, DIM, k=10,
                                               planes=8, nprobe=1).toPandas())
     pd.testing.assert_frame_equal(single, multi, check_dtype=False)
 
 
+def test_data_side_forms_equal_query_side_forms(emb):
+    # multiprobe and IVF probing key queries by the Column form (it keeps
+    # the per-plane dots / per-cell distances) and data by the Arrow
+    # matmul form: the two must assign every vector identically
+    def rows(df, col):
+        return sorted(map(tuple, df.select("vec_id", F.col(col).cast("long"))
+                          .collect()))
+
+    data = rows(SIM.with_lsh_bucket(emb, DIM, 8), "bucket")
+    query = rows(SIM.with_lsh_bucket(emb, DIM, 8, _keep_dots=True), "bucket")
+    assert data == query and len(data) == emb.count()
+    assert len({b for _, b in data}) > 1
+    data = rows(SIM.with_ivf_cell(emb, DIM, 8), "cell")
+    query = rows(SIM.with_ivf_cell(emb, DIM, 8, _keep_dists=True), "cell")
+    assert data == query and len(data) == emb.count()
+    assert len({c for _, c in data}) > 1
+
+
 def test_blocked_near_dup_equals_broadcast_twin(emb):
-    exact = _norm(SIM.cosine_near_dup_pairs(emb, 3, 10).toPandas())
+    exact = _norm(cosine_near_dup_pairs(emb, 3, 10).toPandas())
     blocked = _norm(SIM.cosine_near_dup_pairs_blocked(
         emb, 3, 10, num_blocks=8).toPandas())
     pd.testing.assert_frame_equal(blocked, exact, check_dtype=False)
@@ -89,7 +177,7 @@ def test_blocked_near_dup_equals_broadcast_twin(emb):
 
 
 def test_lsh_near_dup_subset_and_verified(emb):
-    exact = SIM.cosine_near_dup_pairs(emb, 3, 10).toPandas()
+    exact = cosine_near_dup_pairs(emb, 3, 10).toPandas()
     lsh = SIM.cosine_near_dup_pairs_lsh(
         emb, DIM, 3, 10, planes_per_band=3, bands=12).toPandas()
     exact_set = set(zip(exact.id_a, exact.id_b))
@@ -113,7 +201,7 @@ def test_lsh_near_dup_prunes_at_production_threshold(spark):
     pdf = pd.DataFrame({"vec_id": np.arange(len(vecs), dtype=np.int64),
                         "embedding": [v.tolist() for v in vecs]})
     df = spark.createDataFrame(pdf)
-    exact = SIM.cosine_near_dup_pairs(df, 8, 10).toPandas()
+    exact = cosine_near_dup_pairs(df, 8, 10).toPandas()
     lsh = SIM.cosine_near_dup_pairs_lsh(df, DIM, 8, 10,
                                         planes_per_band=6, bands=4)
     got = set(zip(*(lsh.toPandas()[c] for c in ("id_a", "id_b"))))
