@@ -11,10 +11,11 @@ plans plus vectorized pandas/Arrow UDF kernels.
 
 Layout
 ------
-- ``kernels``    pure-numpy quadtree / mercator / calc_qts kernels (also the
-                 test oracle; normative spec = SURVEY.md section 8)
-- ``cells``      S2-style Hilbert coarse-index cells + k_ring
-- ``functions``  JVM-side Column-expression versions of the kernels
+- ``kernels``    pure-numpy quadtree / mercator / calc_qts kernels and the
+                 key constants (also the test oracle; normative spec =
+                 SURVEY.md section 8)
+- ``functions``  the key formulas as SQL text (``sqlgen``, shared with the
+                 DuckDB oracle) and Column wrappers that parse it
 - ``operators``  calc_qts, tiling, spatial joins, counts, diff/CDC, dedup,
                  text analysis, similarity search, image plumbing
 - ``sources``    synthetic image+caption table generator (FIXTURES.md) and
@@ -24,13 +25,5 @@ Layout
 """
 
 from osmquadtree_rust_bindings_spark import kernels  # noqa: F401
-
-# Reference constants (osmquadtree_rust_bindings/__init__.py:147,167-168,183;
-# src/sortblocks.rs:8) — see BASELINE.md.
-MAX_QT_LEVEL = 18          # run_calcqts python wrapper default
-GROUP_QT_LEVEL = 17        # run_sortblocks regroup depth
-QT_BUFFER = 0.05           # bbox buffer ratio
-GROUP_TARGET = 40_000      # elements per tile group
-COORD_SCALE = 10_000_000   # int 1e-7 degrees fixed point
 
 __version__ = "0.1.0"

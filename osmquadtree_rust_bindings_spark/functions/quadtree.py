@@ -1,9 +1,11 @@
-"""JVM-side Column implementations of the quadtree kernels.
+"""Column wrappers over the quadtree SQL text in ``sqlgen.py``.
 
-Everything here is pure Column algebra (whole-stage-codegen friendly, zero
-Python in the hot path).  Semantics are pinned by the numpy oracle in
-``kernels.py`` and the shared SQL fragments in ``sqlgen.py``; tests assert
-bit-exact agreement between all three.
+The key formulas (normalization, grid index, bit spread, descent units)
+are written once, as sqlgen strings, and parsed JVM-side with ``F.expr``;
+the helpers built here from Column operators (depth, round, is-parent, key
+range, haversine) do not repeat them.  Everything stays whole-stage-codegen
+friendly, with zero Python in the hot path.  Tests pin the results
+bit-exact against the numpy oracle in ``kernels.py``.
 
 Reference semantics: Quadtree ops src/elements.rs:29-65; calc_qts
 src/sortblocks.rs:7-21 (see SURVEY.md §2.7/§8).
@@ -15,24 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osmquadtree_rust_bindings_spark.functions import sqlgen
-from osmquadtree_rust_bindings_spark.functions.sqlgen import (
-    BUF_DEN,
-    MAX_DEPTH,
-    UNITS,
-    _SPREAD_STEPS,
-)
-
-
-def _spread_col(c: Column) -> Column:
-    """Bit spread as ONE Column expression.  Each step references its child
-    twice, so the tree holds 2^5 copies of ``c`` — only pass an attribute
-    reference; for computed inputs use :func:`_with_spread_steps` (chained
-    projections) or whole-stage codegen emits 32 copies of the input code
-    and the fused method blows janino's 64 KB limit (silent interpreted
-    fallback, measured ~20x slower)."""
-    for shift, mask in _SPREAD_STEPS:
-        c = (c.bitwiseOR(F.shiftleft(c, shift))).bitwiseAND(F.lit(mask))
-    return c
+from osmquadtree_rust_bindings_spark.functions.sqlgen import _SPREAD_STEPS
+from osmquadtree_rust_bindings_spark.kernels import BUF_DEN, MAX_DEPTH, UNITS
 
 
 def _with_spread_steps(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -46,38 +32,13 @@ def _with_spread_steps(df: DataFrame, cols: list[str]) -> DataFrame:
     trips per step per column, and driver-side plan construction — a
     constant, data-independent cost — dominated the sf0.1 gate wall
     (with_bbox_qt built in 0.81s warm vs 0.75s to EXECUTE it over 457k
-    rows).  Parsed and operator-built trees analyze identically; the qt
-    unit tests pin all forms bit-exact against the numpy kernels."""
+    rows).  The qt unit tests pin the result bit-exact against the numpy
+    kernels."""
     for shift, mask in _SPREAD_STEPS:
         df = df.withColumns({
             c: F.expr(sqlgen.spread_step(c, shift, mask)) for c in cols
         })
     return df
-
-
-def x_norm(lon: Column) -> Column:
-    return (lon / 10000000.0 + 180.0) / 360.0
-
-
-def y_norm(lat: Column) -> Column:
-    pi = 3.141592653589793
-    return (
-        F.log(F.tan(F.lit(pi / 4) + (lat / 10000000.0) * (pi / 180) / 2)) / pi
-        + 1.0
-    ) / 2.0
-
-
-def grid_index(norm: Column, depth: int) -> Column:
-    n = 1 << depth
-    return F.least(
-        F.greatest(F.floor(norm * float(n)).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-
-
-def qt_from_cells(ix: Column, iy: Column, depth: int) -> Column:
-    morton = F.shiftleft(_spread_col(ix), 1).bitwiseOR(_spread_col(iy))
-    return F.shiftleft(morton, 63 - 2 * depth).bitwiseOR(F.lit(depth))
 
 
 def qt_depth(qt: Column) -> Column:
@@ -135,13 +96,6 @@ def with_point_qt(df: DataFrame, lon: str, lat: str,
     return df.withColumn(out, F.expr(
         f"shiftleft(shiftleft(__sx, 1) | __sy, {63 - 2 * depth}) | {depth}"
     )).drop("__sx", "__sy")
-
-
-def units(norm: Column) -> Column:
-    return F.least(
-        F.greatest(F.floor(norm * float(UNITS)).cast("long"), F.lit(0)),
-        F.lit(UNITS - 1),
-    )
 
 
 def with_bbox_qt(df: DataFrame, minlon: str, minlat: str, maxlon: str,

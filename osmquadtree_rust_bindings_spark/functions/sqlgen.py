@@ -11,14 +11,13 @@ round differently from DuckDB — measured as a 1-in-46k floor() boundary
 flip before this rule.
 
 Mirrors kernels.py (the numpy oracle); normative spec is SURVEY.md §8.
+The key constants are kernels.py's; the fixed-point scale appears in the
+text as the literal ``1e7`` (``kernels.COORD_SCALE``).
 """
 
 from __future__ import annotations
 
-COORD_SCALE = 10_000_000
-MAX_DEPTH = 18
-BUF_DEN = 20
-UNITS = 2 * BUF_DEN * (1 << MAX_DEPTH)
+from osmquadtree_rust_bindings_spark.kernels import BUF_DEN, MAX_DEPTH, UNITS
 
 _SPREAD_STEPS = (
     (16, 0x0000FFFF0000FFFF),

@@ -22,12 +22,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from osmquadtree_rust_bindings_spark import kernels as K
 from osmquadtree_rust_bindings_spark.functions import quadtree as Q
 
 GROUND_RES = 10_000  # 1e-7 deg per pixel (FIXTURES.md §1.1)
-MAX_QT_LEVEL = 18
-GROUP_QT_LEVEL = 17
-CELL_LEVEL = 7  # coarse-index depth (SQL-expressible morton cell)
+MAX_QT_LEVEL = K.MAX_DEPTH
+CELL_LEVEL = 7  # the coarse index: qt_point's ancestor at this depth
 
 
 def with_lonlat_from_phash(df: DataFrame, phash: str = "phash") -> DataFrame:

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from osmquadtree_rust_bindings_spark import kernels as K
 from osmquadtree_rust_bindings_spark.functions import quadtree as Q
 from osmquadtree_rust_bindings_spark.functions import sqlgen
+from osmquadtree_rust_bindings_spark.operators import calcqts as CQ
 
 COVER_DEPTH = 8  # coarse cover-grid depth for bbox, PIP and kNN joins
 _BOUNDS = ["minlon", "minlat", "maxlon", "maxlat"]
@@ -360,7 +361,7 @@ def knn_join(points: DataFrame, queries: pd.DataFrame | DataFrame,
 # --------------------------------------------------------------- J12 raster
 
 def raster_vector_assign(df: DataFrame, raster_depth: int = 10,
-                         cell_level: int = 7,
+                         cell_level: int = CQ.CELL_LEVEL,
                          qt_col: str = "qt_point") -> DataFrame:
     """(qt_raster, cell) cover pairs present in the data: every raster tile
     at ``raster_depth`` mapped to its covering coarse cell at ``cell_level``

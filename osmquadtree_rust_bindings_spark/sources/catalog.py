@@ -1,12 +1,14 @@
-"""Storage seam: Iceberg when available, plain parquet directories otherwise.
+"""Storage seam: the parquet-directory catalog.
 
-The engine's design target is Iceberg (snapshots = the reference's
-base+change file sets, manifests = the per-cell header index
-/root/reference/src/readpbf.rs:222-243, time travel = the timestamp filter
-F7).  This sandbox has no Iceberg jars, so the seam degrades to
-parquet-directory tables with a tiny JSON snapshot log that preserves the
-semantics the engine relies on: named tables, append/overwrite snapshots,
-and read-as-of-snapshot.
+``Catalog`` stores each table as parquet directories with a tiny JSON
+snapshot log, which keeps the semantics the engine relies on: named
+tables, append/overwrite snapshots and read-as-of-snapshot.  These mirror
+Iceberg's (snapshots = the reference's base+change file sets, manifests =
+the per-cell header index /root/reference/src/readpbf.rs:222-243, time
+travel = the timestamp filter F7), but ``Catalog`` has no Iceberg branch.
+``_iceberg_available`` only probes whether the Iceberg runtime is on the
+classpath; ``test_iceberg_probe_documented`` uses it to run the same
+semantics against a real Iceberg catalog when one is present.
 """
 
 from __future__ import annotations

@@ -31,7 +31,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-SCALE = 10_000_000
+from osmquadtree_rust_bindings_spark import kernels as K
 
 
 def parse_poly(text: str, name: str | None = None) -> pd.DataFrame:
@@ -53,8 +53,8 @@ def parse_poly(text: str, name: str | None = None) -> pd.DataFrame:
             parts = lines[i].split()
             if len(parts) != 2:
                 raise ValueError(f"bad vertex line: {lines[i]!r}")
-            vx.append(int(round(float(parts[0]) * SCALE)))
-            vy.append(int(round(float(parts[1]) * SCALE)))
+            vx.append(int(round(float(parts[0]) * K.COORD_SCALE)))
+            vy.append(int(round(float(parts[1]) * K.COORD_SCALE)))
             i += 1
         if i >= len(lines):
             raise ValueError(f"unterminated section {ring_name!r}")

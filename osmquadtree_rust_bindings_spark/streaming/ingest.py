@@ -12,14 +12,11 @@ streaming-native form on top:
   restarted stream resumes exactly after the last committed file batch.
 - ``stream_cdc_apply``: foreachBatch CDC merge of changetype rows into a
   catalog table (apply_change semantics, src/elements.rs:1022-1027).
-- ``windowed_tile_counts``: event-time windowed per-tile counts with a
-  watermark for late data (beyond-parity streaming aggregate).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from osmquadtree_rust_bindings_spark.operators import calcqts as CQ
 
@@ -38,21 +35,6 @@ def stream_calcqts(spark: SparkSession, input_path: str, schema: str,
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def windowed_tile_counts(stream_df: DataFrame, ts_col: str = "ts",
-                         tile_depth: int = 10,
-                         window: str = "10 minutes",
-                         watermark: str = "30 minutes") -> DataFrame:
-    """Event-time windowed counts per tile with late-data watermark."""
-    from osmquadtree_rust_bindings_spark.functions import quadtree as Q
-
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .withColumn("tile", Q.qt_round(F.col("qt"), tile_depth))
-        .groupBy(F.window(F.col(ts_col), window), F.col("tile"))
-        .count()
     )
 
 

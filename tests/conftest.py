@@ -8,17 +8,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    # the production session (JIT flag, Kryo, Arrow byte cap, skew join)
+    # with a test-sized heap
+    from osmquadtree_rust_bindings_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("osmquadtree-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "4g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("local[4]", app_name="osmquadtree-spark-tests",
+                      extra_conf={"spark.driver.memory": "4g"})
     yield spark
     spark.stop()

@@ -537,28 +537,6 @@ def test_raster_vector_assign(spark, calc, images_pdf):
     assert got.groupby("qt_raster").size().max() == 1
 
 
-def test_hilbert_cells_roundtrip():
-    from osmquadtree_rust_bindings_spark import cells as C
-    rng = np.random.default_rng(0)
-    x = rng.integers(0, 1 << 12, 1000)
-    y = rng.integers(0, 1 << 12, 1000)
-    d = C.hilbert_d(x, y, 12)
-    x2, y2 = C.hilbert_xy(d, 12)
-    assert (x2 == x).all() and (y2 == y).all()
-    # adjacency: consecutive hilbert ids are grid neighbors
-    seq = C.hilbert_xy(np.arange(4 ** 6), 6)
-    dist = np.abs(np.diff(seq[0])) + np.abs(np.diff(seq[1]))
-    assert (dist == 1).all()
-
-
-def test_k_ring_covers_block():
-    from osmquadtree_rust_bindings_spark import cells as C
-    cell = C.cell_from_lonlat(np.array([0]), np.array([0]), 12)
-    ring = C.k_ring(cell, 2, 12)
-    ids = ring[ring >= 0]
-    assert len(np.unique(ids)) == 25
-
-
 # ---- hot-cell skew fixtures (SURVEY §7 risk 3; VERDICT r04 item 3) ----
 # A dense city block at 100TB scale = 10^5+ queries stacked over ONE
 # depth-8 cover cell: the cell_cov equi-join key is maximally skewed.
